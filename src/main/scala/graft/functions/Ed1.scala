@@ -33,6 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Code-point semantics match the built-in (Spark's levenshtein walks
   * UTF-8 sequences, i.e. code points, not UTF-16 units); equal code
   * points are equal UTF-8 byte runs, so byte comparison is exact.
+  * Input is assumed to be valid UTF-8 (what Spark's string functions
+  * produce): the code-point walk steps over continuation bytes, so an
+  * invalid byte sequence may get a different distance than the
+  * built-in. Collated strings are accepted and compared by bytes,
+  * collation-blind.
   * Ed1Spec pins the equivalence differentially (ASCII, multibyte,
   * astral-plane) and the interpreted/codegen parity.
   */
@@ -43,11 +48,12 @@ case class Ed1(left: Expression, right: Expression)
   override def prettyName: String = "graft_ed1"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two string arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+    (left.dataType, right.dataType) match {
+      case (_: StringType, _: StringType) => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two string arguments, got " +
+          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+    }
 
   override def nullSafeEval(a: Any, b: Any): Any =
     Ed1.dist(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])

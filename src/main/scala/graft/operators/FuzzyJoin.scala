@@ -218,6 +218,10 @@ object FuzzyJoin {
         i => concat(str.substr(lit(1), i - 1), str.substr(i + 1, len)))))
   }
 
+  /** [[selfJoin]] at k=1 via the deletion-neighborhood blocking
+    * described above. Contract: `idCol` is unique per row — candidate
+    * pairs dedup on ids and re-attach their strings by id, so a
+    * duplicated id emits one pair row per duplicate base row. */
   def selfJoin1(df: DataFrame, idCol: String, strCol: String)
       : DataFrame =
     deletionSelfJoin(df, idCol, strCol, deletionKeys, 1)
@@ -269,7 +273,8 @@ object FuzzyJoin {
     * wall, `"off"` skips the probe entirely (no extra pass). The
     * probe costs one extra scan+explode of the input — bounded,
     * shuffle-safe (map-side-combined, vocabulary-sized), and the
-    * price of never hitting a surprise quadratic output. */
+    * price of never hitting a surprise quadratic output.
+    * Same unique-`idCol` contract as [[selfJoin1]]. */
   def selfJoin2(df: DataFrame, idCol: String, strCol: String,
       denseGuard: String = "warn", denseRatio: Double = 32.0,
       denseFloor: Long = 1000000L): DataFrame =
@@ -380,7 +385,10 @@ object FuzzyJoin {
     * `(id_a, id_b, dist)` with `id_a` from `left`, `id_b` from
     * `right`, and `levenshtein <= 1` — the [[selfJoin1]] deletion
     * blocking between two frames, same exactness and same bounded
-    * per-key fan-in. NULL ids/strings drop on both sides. */
+    * per-key fan-in. NULL ids/strings drop on both sides. Contract:
+    * `leftId` and `rightId` are each unique per row — strings
+    * re-attach to the deduped id pairs by id, so a duplicated id emits
+    * one pair row per duplicate base row. */
   def join1(left: DataFrame, leftId: String, leftStr: String,
       right: DataFrame, rightId: String, rightStr: String): DataFrame = {
     // same r18 restructure as [[deletionSelfJoin]]: hashed keys

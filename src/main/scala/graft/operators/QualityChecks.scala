@@ -132,7 +132,11 @@ object QualityChecks {
     *
     * Needs its own two-level aggregate (group → distinct count →
     * violation count), so it cannot fuse into [[audit]]'s single
-    * pass — same standalone-row contract as [[refIntegrity]]. */
+    * pass — same standalone-row contract as [[refIntegrity]].
+    *
+    * Supported `rhs` types are those `countDistinct` accepts: atomic
+    * types, and structs/arrays of them. A map-typed `rhs` is rejected
+    * at analysis (map values have no equality Spark can group by). */
   def fdCheck(df: DataFrame, tableName: String, lhs: Seq[String],
       rhs: String): DataFrame = {
     require(lhs.nonEmpty, "fdCheck: empty lhs")

@@ -18,11 +18,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * independent of history length: this is what makes the operator
   * runnable forever, and what prices the contract below.
   *
-  * Ordering contract (same as [[StreamingSessionize]]): rows must
-  * arrive in event-time order per key ACROSS batches (within a batch
-  * the group iterator is sorted here). Under that contract the result
-  * is EXACTLY the batch [[graft.operators.TemporalJoins.asofBackward]]
-  * of the two streams' union — StreamingAsOfDualSpec asserts it across
+  * Ordering contract: rows must arrive in event-time order per key
+  * ACROSS batches (within a batch the group iterator is sorted here).
+  * Under that contract the result is EXACTLY the batch
+  * [[graft.operators.TemporalJoins.asofBackward]] of the two streams'
+  * union — StreamingAsOfDualSpec asserts it across
   * random time-ordered batch chops. A LATE fact (arriving after a
   * newer dimension version was folded in) cannot be matched from
   * single-version state; it is emitted UNMATCHED rather than matched

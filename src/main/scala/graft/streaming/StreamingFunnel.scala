@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * [[graft.operators.Funnel]]: per entity, emit a row the moment a
   * funnel stage is completed (first stage-k event strictly after the
   * stage-k-1 time). Same watermark-and-buffer state machine as
-  * [[StreamingSessionizeLate]]/[[StreamingAsOfDualLate]]: rows buffer
+  * [[StreamingAsOfDualLate]]: rows buffer
   * until the watermark passes them, then fold in ascending event-time
   * order — so an out-of-order arrival inside the lateness window
   * lands in the right funnel position, and the fold provably equals

@@ -18,9 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Ordering contract: fetches arrive in event-time order per key
   * across micro-batches (within a batch the group iterator is sorted
-  * here) — the [[StreamingSessionize]] contract; a production job in
+  * here) — the [[StreamingAsOfDual]] contract; a production job in
   * front of an out-of-order source adds the watermark-and-buffer
-  * stage ([[StreamingSessionizeLate]] pattern).
+  * stage ([[StreamingAsOfDualLate]] pattern).
   */
 object StreamingRecrawl {
 

@@ -20,7 +20,7 @@ import graft.operators.ClassicQueries
   * clause needed (StreamingRollingAnomalySpec proves streamed ≡ batch
   * across random chops).
   *
-  * Ordering contract (same family as [[StreamingSessionize]]): per
+  * Ordering contract (same family as [[StreamingAsOfDual]]): per
   * key, events arrive in (second-truncated event time, event_id)
   * order across batches — the batch query's window order. Within a
   * batch the group iterator is sorted here. The z-score is rounded to

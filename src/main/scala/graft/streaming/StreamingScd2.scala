@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   * instant) — O(keys), independent of history length, the same
   * discipline as [[StreamingAsOfDual]].
   *
-  * Ordering contract (same family as [[StreamingSessionize]]): per
+  * Ordering contract (same family as [[StreamingAsOfDual]]): per
   * key, records arrive in event-time order ACROSS batches, and records
   * of one instant do not straddle a batch boundary (within a batch the
   * group iterator is sorted here, and instant dedup — highest `seq`

@@ -31,14 +31,18 @@ class Ed1Spec extends GraftSuite {
     val pool = ascii ++ multibyte
     val pairs = for (x <- pool; y <- pool) yield (x, y)
     val df = pairs.toDF("a", "b")
+    // a collated pair is one more input: same bytes, same distance
+    def lcase(c: String) = collate(col(c), "UTF8_LCASE")
     val bad = df.select(col("a"), col("b"),
         call_function("graft_ed1", col("a"), col("b")).as("fast"),
-        levenshtein(col("a"), col("b"), 1).as("dp"))
-      .filter(col("fast") =!= col("dp"))
+        levenshtein(col("a"), col("b"), 1).as("dp"),
+        call_function("graft_ed1", lcase("a"), lcase("b")).as("collated"))
+      .filter(col("fast") =!= col("dp") || col("collated") =!= col("dp"))
       .collect()
     assert(bad.isEmpty, s"graft_ed1 != levenshtein on: ${bad.take(10)
       .map(r => s"(${r.getString(0)}, ${r.getString(1)}): " +
-        s"fast=${r.getInt(2)} dp=${r.getInt(3)}").mkString("; ")}")
+        s"fast=${r.getInt(2)} dp=${r.getInt(3)} collated=${r.getInt(4)}")
+      .mkString("; ")}")
   }
 
   test("differential on long keys with a sliding edit position") {
