@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Load-side sinks (SURVEY §2.1 S8–S11), re-expressed over parquet
   * tables — the test-bed stand-in for the reference's Azure SQL sinks
@@ -502,6 +503,50 @@ object ParquetSinks {
         withBucket(upserts, bucketCol, n)
           .select(keptOld.columns.map(col).toSeq: _*)),
       BucketCol, SaveMode.Overwrite, tmp.toString, numBuckets = n)
+    swapTouchedBuckets(spark, tmp, path, touched.toSeq, upserts.schema)
+  }
+
+  /** Delete every stored row whose `keys.columns` equal one row of
+    * `keys` — the reference's per-line `DELETE WHERE Line=... AND
+    * Server=...` with no append after it. A bucketed table (one with a
+    * [[BucketMarker]]) rewrites only the buckets the keys' `keyCol` —
+    * the column the table is bucketed by — hashes into; a flat table
+    * is rewritten whole. No-op when the table does not exist. */
+  def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
+      keyCol: String): Unit = {
+    require(keys.columns.contains(keyCol),
+      s"keyCol $keyCol must be one of the delete keys ${keys.columns}")
+    val fs = fsOf(spark, path)
+    healCrashedSwaps(fs, path)
+    cleanLegacyBackup(fs, path)
+    if (!exists(spark, path)) return
+    val tmp = tmpPath(path)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val stored = spark.read.parquet(path)
+    def kept(rows: DataFrame): DataFrame = rows
+      .join(keys.distinct(), keys.columns.toSeq, "left_anti")
+      .select(stored.columns.map(col).toSeq: _*)
+    readBucketMarker(fs, new Path(path)) match {
+      case Some(n) =>
+        val touched = withBucket(keys.select(keyCol).distinct(), keyCol, n)
+          .select(BucketCol).distinct().collect().map(_.getInt(0))
+        writePartitioned(kept(stored.filter(col(BucketCol)
+          .isin(touched.toSeq: _*))), BucketCol, SaveMode.Overwrite,
+          tmp.toString, numBuckets = n)
+        swapTouchedBuckets(spark, tmp, path, touched.toSeq,
+          stored.drop(BucketCol).schema)
+      case None =>
+        kept(stored).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        swapDir(fs, tmp, new Path(path))
+    }
+  }
+
+  /** Swap the bucket dirs staged under `tmp` into the table at `path`
+    * and drop touched buckets that staged nothing back; `schema` is the
+    * data schema without the bucket column. */
+  private def swapTouchedBuckets(spark: SparkSession, tmp: Path,
+      path: String, touched: Seq[Int], schema: StructType): Unit = {
+    val fs = fsOf(spark, path)
     val staged = fs.listStatus(tmp).filter(_.isDirectory)
       .map(_.getPath.getName).toSet
     staged.foreach { name =>
@@ -519,8 +564,8 @@ object ParquetSinks {
     if (!fs.listStatus(new Path(path)).exists(st => st.isDirectory &&
         st.getPath.getName.startsWith(s"$BucketCol="))) {
       val zeroTmp = new Path(tmp, s"$BucketCol=0")
-      upserts.limit(0).write.mode(SaveMode.Overwrite)
-        .parquet(zeroTmp.toString)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .write.mode(SaveMode.Overwrite).parquet(zeroTmp.toString)
       swapDir(fs, zeroTmp, new Path(path, s"$BucketCol=0"))
     }
     fs.delete(tmp, true)

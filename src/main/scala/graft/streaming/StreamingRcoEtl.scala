@@ -24,15 +24,26 @@ import graft.sinks.ParquetSinks
   *  2. the touched lines' FULL landed history is re-read (bucket-pruned)
   *     into the canonical downtime log; the production log is the whole
   *     landed table, because the brandcode master is site-wide;
-  *  3. the batch pipeline runs over those logs and loads through the
+  *  3. every stored row of the touched lines is deleted from the
+  *     per-line tables, and this server's rows from BRANDCODE_data;
+  *  4. the batch pipeline runs over those logs and loads through the
   *     idempotent sinks, exactly as [[RcoEtl.runSites]] does per site.
   *
-  * Every per-line table is recomputed over the line's full history, so
-  * each windowed upsert's threshold is the line's first row and the
-  * whole line is replaced: the stored tables equal one batch run over
-  * everything landed so far, late and out-of-order events included,
-  * with no lookback, watermark or lateness bound to tune. The price is
-  * that a trigger's cost grows with the touched lines' history.
+  * Step 3 makes the result exact: the load's windowed upserts delete
+  * only stored rows from the recomputed rows' earliest time (less a
+  * pad), so alone they would keep rows the recomputation drops — the
+  * stored first stop of a changeover a late CO event extends past it,
+  * or a changeover a corrected re-send removes. The stored tables thus
+  * equal one batch run over everything landed so far (late,
+  * out-of-order and re-sent events included; no lookback, watermark or
+  * lateness bound) up to the reference's adaptive rounding: each load
+  * rounds a double column by the mean magnitude of the frame it writes
+  * (`ProdOps.roundAdaptiveAll`), and a trigger writes only the touched
+  * lines (ROADMAP, carry-over). A crash between steps 3 and 4 leaves
+  * the touched lines missing until the restarted query re-runs the
+  * uncommitted batch. A trigger's cost grows with the site's landed
+  * history: the touched lines' history, plus a full scan of the landed
+  * table for the site-wide brandcode master.
   *
   * Emission: a line's last changeover is still open — a later event
   * can extend it — yet it is upserted provisionally, and corrected by
@@ -44,11 +55,16 @@ object StreamingRcoEtl {
   /** Table under `baseDir` holding every raw event landed so far. */
   val LandedEvents = "Landed_Events"
 
+  /** Each per-line table [[RcoEtl.load]] writes, with its line column. */
+  private val LineTables = Seq("CO_Aggregated_Data" -> "LINE",
+    "CO_Event_Log" -> "LINE", "First_Stop_after_CO_Data" -> "LINE",
+    "Gantt_Data" -> "Line", "Event_Log_for_Gantt" -> "LINE",
+    "Runtime_per_Day_data" -> "LINE", "Script_Data" -> "MES_Line_Name")
+
   /** Start the driver.
     * @param events     streaming frame with the
     *                   [[graft.sources.Tables.events]] schema
-    * @param baseDir    directory of the output tables (and the landed
-    *                   events)
+    * @param baseDir    directory of the output and landed tables
     * @param checkpoint the query's checkpoint location */
   def start(events: DataFrame, p: RcoEtl.SiteParams, baseDir: String,
       checkpoint: String): StreamingQuery =
@@ -74,6 +90,13 @@ object StreamingRcoEtl {
           ParquetSinks.readBucketsFor(spark, landed, "user_id", rows)
             .filter(col("user_id").isin(lines.toSeq: _*)))
         val prodLog = Rco.productionLog(spark.read.parquet(landed))
+        // step 3; the model's line name is 'L' + user_id (see [[Rco]])
+        import spark.implicits._
+        val touched = lines.map(l => (p.server, s"L$l")).toSeq
+        LineTables.foreach { case (t, c) => ParquetSinks.deleteKeys(spark,
+          s"$baseDir/$t", touched.toDF("Server", c), c) }
+        ParquetSinks.deleteKeys(spark, s"$baseDir/BRANDCODE_data",
+          Seq(p.server).toDF("Server"), "Server")
         val (outputs, release) = RcoEtl.runReleasable(fullLog, prodLog, p)
         try RcoEtl.load(spark, outputs, baseDir, p.server)
         finally release()

@@ -54,6 +54,26 @@ class SinksSpec extends GraftSuite {
     assert(rows(path) == expected, "second identical load must be a no-op")
   }
 
+  test("deleteKeys removes the keyed rows from bucketed and flat tables") {
+    val stored = Seq(("A", "L1", 10.0), ("A", "L1", 90.0), ("B", "L1", 10.0),
+      ("A", "L2", 10.0)).toDF("Server", "LINE", "t")
+    val keys = Seq(("A", "L1")).toDF("Server", "LINE")
+    val expected = Set("B|L1|10.0", "A|L2|10.0")
+    val bucketed = tmp()
+    ParquetSinks.upsertWindow(spark, stored, bucketed, "LINE", "t")
+    ParquetSinks.deleteKeys(spark, bucketed, keys, "LINE")
+    assert(rows(bucketed) == expected)
+    val flat = tmp()
+    ParquetSinks.upsertByKey(spark, stored, flat, Seq("Server", "LINE", "t"))
+    ParquetSinks.deleteKeys(spark, flat, keys, "LINE")
+    assert(rows(flat) == expected)
+    // deleting every row leaves a readable, empty bucketed table
+    ParquetSinks.deleteKeys(spark, bucketed,
+      Seq(("B", "L1"), ("A", "L2")).toDF("Server", "LINE"), "LINE")
+    assert(rows(bucketed).isEmpty)
+    ParquetSinks.deleteKeys(spark, tmp(), keys, "LINE") // no table: no-op
+  }
+
   test("replaceDedup keeps only non-superseded stored keys, is idempotent") {
     val path = tmp()
     ParquetSinks.replaceDedup(spark,

@@ -58,14 +58,16 @@ class StreamingRcoEtlSpec extends GraftSuite {
         .sorted.toSeq
     }.toMap
 
-  /** One batch run + load of every event. */
-  private lazy val batchDir: String = {
+  /** One batch run + load of `evs`; returns the output dir. */
+  private def batchRun(evs: Seq[RawEvent]): String = {
     val dir = tmp("graft-rco-batch").toString
-    val all = events.toDF()
+    val all = evs.toDF()
     RcoEtl.load(spark, RcoEtl.run(Rco.downtimeLogDeduped(all),
       Rco.productionLog(all), params), dir, params.server)
     dir
   }
+
+  private lazy val batchDir: String = batchRun(events)
 
   private lazy val expected = snapshot(batchDir)
 
@@ -165,5 +167,35 @@ class StreamingRcoEtlSpec extends GraftSuite {
       s"batch $last was not replayed")
     assert(snapshot(dir) == before)
     assertParity(dir, "replayed")
+  }
+
+  test("a late CO event and a corrected re-send leave no stale rows") {
+    val t0 = java.sql.Timestamp.valueOf("2024-03-04 06:00:00").getTime
+    def ev(id: Long, line: Long, minute: Int, kind: String, value: Double) =
+      RawEvent(id, new java.sql.Timestamp(t0 + minute * 60000L), line, kind,
+        value, """{"k": 1}""")
+    // L1: a 10-minute CO, then stops at +20 and +60 min; the first is
+    // the CO's first stop. L2: a CO and its stop, never touched again.
+    // L3: a CO and its stop.
+    val first = Seq(ev(1, 1, 0, "error", 10), ev(2, 1, 20, "view", 1),
+      ev(3, 1, 60, "view", 1), ev(11, 2, 0, "error", 10),
+      ev(12, 2, 30, "view", 1), ev(21, 3, 0, "error", 10),
+      ev(22, 3, 30, "view", 1))
+    // late: a CO event 5 minutes after L1's CO joins it and ends it at
+    // +25 min, past the stored first stop — the first stop is now +60
+    val late = Seq(ev(4, 1, 15, "error", 10))
+    // corrected re-send: L3's only CO event was a view, so L3 has no CO
+    val resent = Seq(ev(21, 3, 0, "view", 10))
+    val (dir, _, _) = streamed(Seq(first, late, resent))
+    val finalEvents = (first ++ late).filterNot(_.event_id == 21) ++ resent
+    val want = snapshot(batchRun(finalEvents))
+    val got = snapshot(dir)
+    tables.foreach(t => assert(got(t) == want(t), t))
+    val stops = spark.read.parquet(s"$dir/First_Stop_after_CO_Data")
+      .filter(col("LINE") === "L1")
+    assert(stops.count() == 1 &&
+      stops.head().getAs[String]("downtime_id") == "3")
+    assert(spark.read.parquet(s"$dir/CO_Aggregated_Data")
+      .filter(col("LINE") === "L3").isEmpty)
   }
 }
