@@ -120,8 +120,10 @@ object BrandcodeResolve {
       .select(col("CO_Identifier"), col("Current_BRANDCODE"))
 
     // one row per CO; consumed by the Next stream AND the final join —
-    // persist so the Current pass (union + two window sorts) runs once
-    val co = CacheScope.pin(nbr.join(current, Seq("CO_Identifier")))
+    // cut so the Current pass (union + two window sorts) runs once; a
+    // pin over a cut `coAgg` stops matching once a consumer's self-join
+    // re-instances that leaf, and each consumer would recompute it
+    val co = CacheScope.cut(nbr.join(current, Seq("CO_Identifier")))
 
     // ---- Next pass: stream keyed at event uptime-start / CO start.
     val nextStream = ev

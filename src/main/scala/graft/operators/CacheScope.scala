@@ -5,9 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Tracked persists. Operators that cache an internal frame (a per-CO
-  * spine consumed by two passes, a ranked-stops frame consumed by two
-  * aggregates) call [[pin]] instead of `persist` directly. With no
+/** Tracked persists. Operators that cache an internal frame (the
+  * canonical log every RCO output re-reads, a scored frame consumed by
+  * several stages) call [[pin]] instead of `persist` directly. With no
   * scope open it IS `persist(MEMORY_AND_DISK)` — single-query callers
   * keep the warm cache they want. Inside [[collect]] every pin is also
   * recorded, so an orchestrator that loops (a fleet run over N sites)
@@ -121,6 +121,16 @@ object CacheScope {
     }
     df
   }
+
+  /** Eager, lineage-CUT materialization of `df`, [[track]]ed. A
+    * [[pin]] is an `InMemoryRelation` carrying its source's whole
+    * physical plan, which Spark re-renders at every execution start and
+    * AQE stage update of every plan over it; a cut is a `LogicalRDD`
+    * leaf that keeps `df`'s partitioning, ordering and size
+    * ([[org.apache.spark.sql.GraftCheckpoint]]). Its blocks cannot be
+    * recomputed — the [[track]] contract. */
+  def cut(df: DataFrame): DataFrame =
+    track(org.apache.spark.sql.GraftCheckpoint.local(df))
 
   /** Free the blocks behind a frame REGARDLESS of how it is persisted.
     * `Dataset.unpersist` only clears CacheManager entries ([[pin]]s);

@@ -128,13 +128,11 @@ object GanttGenerate {
     *                  1/1.7/2.3/4 for the constraint pass) */
   def points(assigned: DataFrame, statusCol: Column): DataFrame = {
     val wRn = wCoM.orderBy(col("START_EPOCH"), col("dtid"))
-    // still pinned although single-consumer in THIS plan: the frame
-    // below the explode (assignment join + the (CO, MACHINE) sort) is
-    // the kernel's expensive stage, and repeated executions of the
-    // same Gantt table (bench reps, probe+write pairs) re-read it
-    // from cache — removing the pin measured 0.47 -> 1.27 s on the
-    // rco_gantt bench entry (every rep re-ran the join + sort)
-    val ranked = CacheScope.pin(assigned
+    // not pinned: the frame has one consumer here, the bench clears
+    // its cache before every rep, and RcoEtl.load checkpoints each
+    // table's frame for its probe+write pair; a pin would only nest
+    // this plan inside every Gantt plan built on it
+    val ranked = assigned
       .withColumn("st", statusCol.cast("double"))
       // project BEFORE the per-(CO, machine) sort: the assigned stream
       // carries every log column (comments, causes, attribution
@@ -173,7 +171,7 @@ object GanttGenerate {
       .withColumn("__lf",
         max(when(col("own_time").isNotNull,
           struct(col("rn"), col("own_time")))).over(wCoM))
-      .withColumn("__max_rn", max(col("rn")).over(wCoM)))
+      .withColumn("__max_rn", max(col("rn")).over(wCoM))
 
     def pt(t: Column, s: Column, pk: Column, seq: Column) =
       struct(t.as("t"), s.as("s"), pk.as("pk"), seq.cast("long").as("seq"))

@@ -68,9 +68,9 @@ object RcoPipeline {
       DataFrame]()
 
   /** Memoize a named output table per (session, sf-dir, site params):
-    * operators that persist internal frames (Gantt's ranked stops,
-    * brandcode's CO frame) would otherwise pin a NEW set of cached
-    * blocks on every invocation of the same query — e.g. Bench's warmup
+    * operators that cache internal frames (brandcode's per-CO
+    * checkpoint) would otherwise cache a NEW set of blocks on every
+    * invocation of the same query — e.g. Bench's warmup
     * + 2 timed runs tripled the Gantt cache footprint. One output table
     * per run is also the reference's semantics. Params are part of the
     * key (mirroring spine/fsMemo) so two sites sharing a session never

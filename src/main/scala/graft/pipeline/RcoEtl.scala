@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint,
+  SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators._
 import graft.sinks.ParquetSinks
@@ -44,56 +47,44 @@ object RcoEtl {
       : Map[String, DataFrame] =
     runReleasable(fullLog0, prodLog, p, constraintCounts)._1
 
-  /** [[run]] plus a release handle that unpersists every frame pinned
-    * while building this site's plans — the five spine frames below
-    * AND the operator-internal caches (BrandcodeResolve's per-CO frame,
-    * the Gantt passes' ranked stops), captured via [[CacheScope]]. A
-    * single-site caller can ignore the handle (the session keeps one
-    * site's spine warm, which is what its queries want) — but anything
-    * that LOOPS sites must call it per site, or the cache accumulates
-    * O(sites) dead frames and eviction pressure lands on whichever
-    * site runs last (the exact pathology the bench had to work around
-    * with clearState). [[runSites]] does. */
+  /** [[run]] plus a release handle that frees every frame this site
+    * materialized for reuse, captured via [[CacheScope]]: the canonical
+    * log's pin and the spine's eager [[CacheScope.cut]]s (so this call
+    * runs the spine, and each output plans over checkpoint leaves, not a
+    * tower of nested cached plans). A single-site caller may ignore it:
+    * the pin then lives until the cache is cleared, the checkpoints
+    * until the outputs are garbage-collected and Spark's ContextCleaner
+    * reclaims them. A site LOOP must call it per site, or dead blocks
+    * pile up and eviction lands on whichever site runs last;
+    * [[runSites]] does. */
   def runReleasable(fullLog0: DataFrame, prodLog: DataFrame, p: SiteParams,
       constraintCounts: Option[DataFrame] = None)
       : (Map[String, DataFrame], () => Unit) = CacheScope.collect {
-    def pin(df: DataFrame): DataFrame = CacheScope.pin(df)
-    // Every output table re-reads the canonical log (the Gantt passes
-    // alone consume it four times); without a persist each consumer
-    // re-executes the dedup + UPTIME windows from the source scan —
-    // measured 2x+ on the end-to-end wall time. The reference computes
-    // this frame once per site run (`App/etl/overall_etl.py:52-80`).
-    // A frame that arrives ALREADY persisted belongs to the caller (a
-    // fleet loop sharing the canonical log across sites) — pinning it
-    // into this site's scope would let the site's release evict the
-    // shared cache mid-fleet, so leave its lifecycle to its owner.
-    val fullLog =
-      if (fullLog0.storageLevel != org.apache.spark.storage
-        .StorageLevel.NONE) fullLog0
-      else {
-        val p = pin(fullLog0)
-        // materialize the canonical log BEFORE any consumer's plan
-        // compiles (one extra count job): under AQE a plan compiled
-        // against a not-yet-materialized cache sees UnknownPartitioning
-        // (the cached subtree is an AdaptiveSparkPlanExec, which
-        // exposes neither partitioning nor ordering), so every
-        // downstream window/join/aggregate re-exchanges AND re-sorts
-        // the full log; once materialized, consumers reuse its
-        // (LINE)-hash partitioning and (LINE, START_EPOCH, dtid) order
-        p.count()
-        p
-      }
+    import CacheScope.cut
+    // Every output re-reads the canonical log (the Gantt passes four
+    // times); the reference computes it once per site run
+    // (`App/etl/overall_etl.py:52-80`). It alone stays a pin, not a
+    // cut: a fleet shares one persisted log across its sites, and pin
+    // leaves a caller-persisted frame, unregistered, to its owner, where
+    // a cut would copy the whole log per site. It is materialized before
+    // any consumer's plan compiles: under AQE a plan compiled against an
+    // unbuilt cache sees UnknownPartitioning, so it would re-exchange and
+    // re-sort the full log instead of reusing its (LINE) clustering and
+    // (LINE, START_EPOCH, dtid) order.
+    val owned = fullLog0.storageLevel == StorageLevel.NONE
+    val fullLog = CacheScope.pin(fullLog0)
+    if (owned) fullLog.count()
     val sesParams = Sessionize.Params(p.triggerParam, p.splitOnCause,
       p.changeoverFailureNoSplit, p.pythonFactor4)
     val coLog = graft.model.Rco.coFilter(fullLog, p.coPredicateSql)
-    val ses = pin(Sessionize(coLog, sesParams))
-    val agg = pin(CoAggregate(ses))
+    val ses = cut(Sessionize(coLog, sesParams))
+    val agg = cut(CoAggregate(ses))
     // shared by uptime-till-next-CO and first-stop (computed once)
-    val assigned = pin(FirstStopAfterCo.assignedStops(agg, fullLog))
+    val assigned = cut(FirstStopAfterCo.assignedStops(agg, fullLog))
 
     val bc = BrandcodeResolve(agg, fullLog)
-    // pinned: consumed twice by load (table write + Script_Data aggregate)
-    val coAggregated = pin(agg
+    // cut: consumed twice by load (table write + Script_Data aggregate)
+    val coAggregated = cut(agg
       // MultiConstraint sites report the prorated downtime
       // (`App/etl/transform/mes_etl.py:225-230` divides in place)
       .withColumn("CO_DOWNTIME",
@@ -137,9 +128,9 @@ object RcoEtl {
       val consLog = GanttGenerate.constraintLog(fullLog, ses,
         p.constraintMachineSuffixes)
       // ONE window-assignment join feeds both Gantt tables (it is the
-      // Gantt chain's expensive stage); pinned so the point kernel and
+      // Gantt chain's expensive stage); cut so the point kernel and
       // the G4 event log don't re-run it
-      val gAssigned = pin(GanttGenerate.assignedTagged(agg, fullLog,
+      val gAssigned = cut(GanttGenerate.assignedTagged(agg, fullLog,
         consLog, constraintCounts))
       withFs +
         ("Gantt_Data" -> GanttGenerate.ganttDataFromAssigned(gAssigned)
@@ -171,45 +162,36 @@ object RcoEtl {
       : Map[String, String] = {
     // The canonical logs are site-INDEPENDENT: every site re-reads
     // them (the dedup + UPTIME windows for fullLog, the In-Production
-    // scan for prodLog). Persist them ONCE across the loop instead of
-    // letting each site's scope pin-and-release its own copy — N-1
-    // recomputes of the spine for an N-site fleet. Frames the caller
-    // already persisted keep their caller-owned lifecycle.
-    import org.apache.spark.storage.StorageLevel
-    val ownFull = fullLog.storageLevel == StorageLevel.NONE
-    val ownProd = prodLog.storageLevel == StorageLevel.NONE
-    if (ownFull) {
-      fullLog.persist(StorageLevel.MEMORY_AND_DISK)
+    // scan for prodLog). Pin them ONCE in a fleet scope, not per site
+    // (N-1 recomputes for an N-site fleet); the site scopes leave these
+    // persisted frames alone, as pin leaves a caller's to the caller.
+    val (statuses, release) = CacheScope.collect {
+      val full = CacheScope.pin(fullLog)
       // materialize before the first site's plans compile — see the
-      // runReleasable fullLog pin comment (cached partitioning/order
-      // are invisible to consumers until the cache is built)
-      fullLog.count()
-      ()
+      // runReleasable canonical-log comment (cached partitioning and
+      // order are invisible to consumers until the cache is built)
+      full.count()
+      val prod = CacheScope.pin(prodLog)
+      sites.map { p =>
+        p.server -> (try {
+          // per-site release: else the Nth site runs under N-1 sites'
+          // dead spine blocks (see the bench's clearState history)
+          val (outputs, release) = runReleasable(full, prod, p)
+          try load(spark, outputs, baseDir, p.server) finally release()
+          "Success"
+        } catch {
+          // NonFatal only: an OutOfMemoryError/LinkageError means the
+          // JVM (and likely the SparkContext) is corrupt — recording it
+          // as a per-site Failure and continuing the fleet would be lying
+          case scala.util.control.NonFatal(e) =>
+            s"Failure (${e.getClass.getSimpleName}: " +
+              s"${Option(e.getMessage).getOrElse("").linesIterator.take(1)
+                .mkString})"
+        })
+      }.toMap
     }
-    if (ownProd) prodLog.persist(StorageLevel.MEMORY_AND_DISK)
-    try sites.map { p =>
-      p.server -> (try {
-        // releasable variant: a fleet run pins five spine frames PER
-        // SITE — without the per-site unpersist the Nth site computes
-        // under N-1 sites' dead cache (eviction pressure, phantom
-        // slowdowns; see the bench's clearState history)
-        val (outputs, release) = runReleasable(fullLog, prodLog, p)
-        try load(spark, outputs, baseDir, p.server) finally release()
-        "Success"
-      } catch {
-        // NonFatal only: an OutOfMemoryError/LinkageError means the JVM
-        // (and likely the SparkContext) is corrupt — recording it as a
-        // per-site Failure and continuing the fleet would be lying
-        case scala.util.control.NonFatal(e) =>
-          s"Failure (${e.getClass.getSimpleName}: " +
-            s"${Option(e.getMessage).getOrElse("").linesIterator.take(1)
-              .mkString})"
-      })
-    }.toMap
-    finally {
-      if (ownFull) fullLog.unpersist()
-      if (ownProd) prodLog.unpersist()
-    }
+    release()
+    statuses
   }
 
   /** Script_Data metadata row per line (A8/S11 stats,
@@ -298,21 +280,33 @@ object RcoEtl {
         .withColumn("Data_Update_Time", lit(null).cast("timestamp")))
     }
 
-  /** Idempotent load (S8–S11): the windowed tables go through the
-    * delete+append upsert keyed on LINE — including the S9 CASCADE to
-    * the event-log / Gantt / first-stop tables with the reference's
-    * pads (`ref/RCO_Overall_orchestrator.R:302-499`: event log by event
-    * end, Gantt with a 20-minute pad) — the brandcode master through
-    * full-replace-with-dedup, Script_Data through the keyed merge.
+  /** The windowed tables [[load]] upserts per line, in write order:
+    * (table, line column, time column, delete pad in seconds). The
+    * reference's pads: event log by event end, Gantt 20 minutes
+    * (`ref/RCO_Overall_orchestrator.R:302-499`). */
+  private val WindowTables = Seq(
+    ("CO_Aggregated_Data", "LINE", "CO_Start_EPOCH", 10.0),
+    ("CO_Event_Log", "LINE", "END_EPOCH", 10.0),
+    ("First_Stop_after_CO_Data", "LINE", "START_TIME", 10.0),
+    ("Gantt_Data", "Line", "StartTime", 20 * 60.0),
+    ("Event_Log_for_Gantt", "LINE", "START_TIME", 20 * 60.0))
+
+  /** Every per-line table [[load]] writes, with its line column. */
+  val LineTables: Seq[(String, String)] =
+    WindowTables.map(t => t._1 -> t._2) ++ Seq(
+      "Runtime_per_Day_data" -> "LINE", "Script_Data" -> "MES_Line_Name")
+
+  /** Idempotent load (S8–S11): the [[WindowTables]] go through the
+    * delete+append upsert keyed on LINE and scoped to the Server —
+    * including the S9 CASCADE to the event-log / Gantt / first-stop
+    * tables — the brandcode master through full-replace-with-dedup,
+    * Script_Data and the daily runtimes through the keyed merge.
     *
-    * CO_Aggregated_Data is materialized FIRST (one count against its
-    * persisted frame): that single pass fills every shared spine cache
-    * (full log, sessionized, coAgg, assigned stops) the other tables
-    * read. The table writes then all run CONCURRENTLY — independent
-    * jobs on disjoint paths reading cached frames (Spark schedules
-    * concurrent actions fine); sequential writes would leave the
-    * cluster idle through each job's commit phase (~2x end-to-end wall
-    * measured at sf0.1). */
+    * The table writes run CONCURRENTLY — independent jobs on disjoint
+    * paths; sequential writes would idle the cluster through each
+    * job's commit (~2x end-to-end wall measured at sf0.1). [[run]] has
+    * already checkpointed the shared spine, so each table's frame is
+    * one short plan over it. */
   def load(spark: SparkSession, outputs: Map[String, DataFrame],
       baseDir: String, server: String,
       updateTime: Option[java.sql.Timestamp] = None): Unit = {
@@ -320,50 +314,34 @@ object RcoEtl {
     // watermark the next incremental run reads back (T1 round-trip).
     val runTime = updateTime.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
-    outputs.get("CO_Aggregated_Data").foreach(df => { df.count(); () })
     // Every write goes through the reference's adaptive decimal
     // reduction first (`ref/RCO_Overall_orchestrator.R:119-131` — the
     // reducer runs on each frame right before its SQL append). The
-    // magnitude probe is an extra action, so the frame is pinned for
-    // the probe+write pair and released after — without the persist
-    // each table's DAG would execute twice (probe, then write).
+    // magnitude probe is an extra action, so the frame is checkpointed
+    // for the probe+write pair (both read one leaf, not the table's
+    // whole DAG twice) and freed after; run's CO_Aggregated_Data
+    // already is one.
     def rounded(df: DataFrame)(write: DataFrame => Unit): Unit = {
-      val alreadyCached = df.storageLevel.useMemory || df.storageLevel.useDisk
-      val p = if (alreadyCached) df
-        else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try write(graft.operators.ProdOps.roundAdaptiveAll(p))
-      finally if (!alreadyCached) { p.unpersist(); () }
+      val c = if (df.queryExecution.analyzed.isInstanceOf[LogicalRDD]) df
+        else GraftCheckpoint.local(df)
+      try write(ProdOps.roundAdaptiveAll(c))
+      finally if (c ne df) CacheScope.release(c)
     }
-    val writes: Seq[() => Unit] = Seq(
-      outputs.get("CO_Aggregated_Data").map(df => () => {
-        rounded(df)(r =>
-          ParquetSinks.upsertWindow(spark, r, s"$baseDir/CO_Aggregated_Data",
-            "LINE", "CO_Start_EPOCH", scopeCols = Seq("Server")))
-        migrateLegacyScriptData(spark, s"$baseDir/Script_Data")
-        rounded(scriptData(df, server, outputs.get("Day_Start"),
-          updateTime = Some(runTime)))(r =>
-          ParquetSinks.upsertByKey(spark, r,
-            s"$baseDir/Script_Data", Seq("Server", "MES_Line_Name")))
-      }),
-      outputs.get("CO_Event_Log").map(df => () =>
-        rounded(df)(r =>
-          ParquetSinks.upsertWindow(spark, r, s"$baseDir/CO_Event_Log",
-            "LINE", "END_EPOCH", scopeCols = Seq("Server")))),
-      outputs.get("First_Stop_after_CO_Data").map(df => () =>
-        rounded(df)(r =>
-          ParquetSinks.upsertWindow(spark, r,
-            s"$baseDir/First_Stop_after_CO_Data", "LINE", "START_TIME",
-            scopeCols = Seq("Server")))),
-      outputs.get("Gantt_Data").map(df => () =>
-        rounded(df)(r =>
-          ParquetSinks.upsertWindow(spark, r, s"$baseDir/Gantt_Data",
-            "Line", "StartTime", padSec = 20 * 60.0,
-            scopeCols = Seq("Server")))),
-      outputs.get("Event_Log_for_Gantt").map(df => () =>
-        rounded(df)(r =>
-          ParquetSinks.upsertWindow(spark, r,
-            s"$baseDir/Event_Log_for_Gantt", "LINE", "START_TIME",
-            padSec = 20 * 60.0, scopeCols = Seq("Server")))),
+    val writes: Seq[() => Unit] = WindowTables.flatMap {
+      case (t, line, time, pad) => outputs.get(t).map(df => () => {
+        rounded(df)(r => ParquetSinks.upsertWindow(spark, r,
+          s"$baseDir/$t", line, time, padSec = pad,
+          scopeCols = Seq("Server")))
+        // Script_Data aggregates the CO table (one row per line)
+        if (t == "CO_Aggregated_Data") {
+          migrateLegacyScriptData(spark, s"$baseDir/Script_Data")
+          rounded(scriptData(df, server, outputs.get("Day_Start"),
+            updateTime = Some(runTime)))(r =>
+            ParquetSinks.upsertByKey(spark, r,
+              s"$baseDir/Script_Data", Seq("Server", "MES_Line_Name")))
+        }
+      })
+    } ++ Seq(
       outputs.get("BRANDCODE_data").map(df => () =>
         rounded(df)(r =>
           ParquetSinks.replaceDedup(spark, r, s"$baseDir/BRANDCODE_data",

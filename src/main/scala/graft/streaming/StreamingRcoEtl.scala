@@ -55,12 +55,6 @@ object StreamingRcoEtl {
   /** Table under `baseDir` holding every raw event landed so far. */
   val LandedEvents = "Landed_Events"
 
-  /** Each per-line table [[RcoEtl.load]] writes, with its line column. */
-  private val LineTables = Seq("CO_Aggregated_Data" -> "LINE",
-    "CO_Event_Log" -> "LINE", "First_Stop_after_CO_Data" -> "LINE",
-    "Gantt_Data" -> "Line", "Event_Log_for_Gantt" -> "LINE",
-    "Runtime_per_Day_data" -> "LINE", "Script_Data" -> "MES_Line_Name")
-
   /** Start the driver.
     * @param events     streaming frame with the
     *                   [[graft.sources.Tables.events]] schema
@@ -93,8 +87,8 @@ object StreamingRcoEtl {
         // step 3; the model's line name is 'L' + user_id (see [[Rco]])
         import spark.implicits._
         val touched = lines.map(l => (p.server, s"L$l")).toSeq
-        LineTables.foreach { case (t, c) => ParquetSinks.deleteKeys(spark,
-          s"$baseDir/$t", touched.toDF("Server", c), c) }
+        RcoEtl.LineTables.foreach { case (t, c) => ParquetSinks
+          .deleteKeys(spark, s"$baseDir/$t", touched.toDF("Server", c), c) }
         ParquetSinks.deleteKeys(spark, s"$baseDir/BRANDCODE_data",
           Seq(p.server).toDF("Server"), "Server")
         val (outputs, release) = RcoEtl.runReleasable(fullLog, prodLog, p)

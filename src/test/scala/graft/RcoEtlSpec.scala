@@ -207,16 +207,85 @@ class RcoEtlSpec extends GraftSuite {
     spark.catalog.clearCache()
     val full = Rco.downtimeLogDeduped(Tables.events(spark, dir))
     val prod = Rco.productionLog(Tables.events(spark, dir))
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compared by id: an earlier test's unreferenced checkpoint may be
+    // garbage-collected (and so leave the map) while this one runs
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     val (out, release) = RcoEtl.runReleasable(full, prod,
       RcoEtl.SiteParams("TestSite", Rco.testCoPredicate,
         machineLevel = false, firstStop = false))
     assert(out("CO_Aggregated_Data").count() > 0)
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
+    assert((persisted -- before).nonEmpty,
       "materializing the outputs should register the pinned spine")
+    // load cuts each table's frame for its probe+write pair and must
+    // free those itself; release then frees the spine
+    RcoEtl.load(spark, out,
+      Files.createTempDirectory("graft-release").toString, "TestSite")
     release()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "release must unpersist everything run pinned (fleet runs loop this)")
+    assert((persisted -- before).isEmpty,
+      "release must unpersist everything run pinned (fleet runs loop " +
+        s"this); left: ${persisted -- before}")
+  }
+
+  test("runReleasable plans read checkpoints, not nested caches, with " +
+      "no more Exchanges per spine frame than the pinned spine") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    object Plans extends AdaptiveSparkPlanHelper
+    spark.catalog.clearCache()
+    val full = Rco.downtimeLogDeduped(Tables.events(spark, dir))
+    val prod = Rco.productionLog(Tables.events(spark, dir))
+    // each spine frame is one eager localCheckpoint action, in order
+    val cuts = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") { cuts.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // Exchange counts of the spine frames' executed plans when they were
+    // pins (parent commit, same data and session), in pipeline order
+    val pinned = Seq("sessionized" -> 0, "co_aggregate" -> 0,
+      "assigned_stops" -> 1, "brandcode_per_co" -> 1, "co_aggregated" -> 6,
+      "gantt_assigned" -> 3)
+    spark.listenerManager.register(listener)
+    val (out, release) =
+      try {
+        val r = RcoEtl.runReleasable(full, prod,
+          RcoEtl.SiteParams("TestSite", Rco.testCoPredicate))
+        // listener events arrive asynchronously
+        eventually(timeout(60.seconds)) {
+          assert(cuts.size >= pinned.size) }
+        r
+      } finally spark.listenerManager.unregister(listener)
+    try {
+      val log = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+        .lookupCachedData(full.asInstanceOf[
+          org.apache.spark.sql.classic.Dataset[_]])
+        .get.cachedRepresentation.cacheBuilder
+      val reads = out.map { case (t, df) =>
+        val plan = df.queryExecution.executedPlan
+        val scans = Plans.collect(plan) {
+          case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+        assert(scans.forall(_ eq log),
+          s"$t reads a cached relation other than the canonical log:\n$plan")
+        scans.size
+      }
+      assert(reads.sum > 0, "the outputs should read the pinned log")
+      val counts = cuts.asScala.toSeq.map(qe =>
+        Plans.collect(qe.executedPlan) { case e: Exchange => e }.size)
+      assert(counts.size == pinned.size, s"spine checkpoints: $counts")
+      info(s"spine Exchanges (pinned -> cut): " +
+        pinned.zip(counts).map { case ((f, m), n) => s"$f $m -> $n" })
+      pinned.zip(counts).foreach { case ((frame, max), n) =>
+        assert(n <= max, s"$frame: $n Exchanges, $max when pinned") }
+    } finally release()
   }
 
   test("a caller-persisted canonical log survives a site's release") {
