@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   *  - materialize through the noop sink, not `.count()` — count lets
   *    Catalyst eliminate sorts and skip column decode, understating cost;
   *  - one untimed warmup query absorbs JVM/Spark session startup;
-  *  - failures are recorded per query (`"errors"`), never timed as -1.
+  *  - failures are recorded per query (`"errors"`), never timed as -1;
+  *  - each entry's process CPU-seconds over its min rep print as a
+  *    `"cpu"` object after `"queries"` (same keys, -1 on failure).
   *
   * The end-to-end pipeline entry runs in a FRESH CHILD JVM (VERDICT r5
   * "what's wrong" #1): clearState releases the Spark cache, but 17
@@ -32,12 +34,13 @@ object Bench {
   /** Set in the forked child so it never re-forks. */
   val ChildEnv = "SPARK_GRAFT_BENCH_CHILD"
 
-  /** [[forkEntry]] outcome: a time, a timeout (do NOT fall back — the
-    * entry itself is likely wedged, and an in-process re-run would
-    * stall the bench the same way, unbounded and heap-contaminated),
+  /** [[forkEntry]] outcome: a time and its CPU-seconds, a timeout (do
+    * NOT fall back — the entry itself is likely wedged, and an
+    * in-process re-run would stall the bench the same way, unbounded
+    * and heap-contaminated),
     * or a spawn/crash failure (in-process fallback is safe). */
   sealed trait ForkResult
-  case class ForkTime(sec: Double) extends ForkResult
+  case class ForkTime(sec: Double, cpuSec: Double) extends ForkResult
   case object ForkTimeout extends ForkResult
   case object ForkFailed extends ForkResult
 
@@ -93,13 +96,23 @@ object Bench {
     if (exit != 0) {
       System.err.println(s"[bench] $name child exit $exit"); ForkFailed
     } else {
-      val m = java.util.regex.Pattern
-        .compile("\"" + name + "\":([-0-9.eE]+)").matcher(out)
-      val t = if (m.find()) Some(m.group(1).toDouble).filter(_ >= 0)
-        else None
-      t.map(ForkTime(_)).getOrElse(ForkFailed)
+      // the first match is the entry's time ("queries" leads the line)
+      def num(prefix: String) = {
+        val m = java.util.regex.Pattern
+          .compile(prefix + "\"" + name + "\":([-0-9.eE]+)").matcher(out)
+        if (m.find()) Some(m.group(1).toDouble) else None
+      }
+      num("").filter(_ >= 0)
+        .map(ForkTime(_, num("\"cpu\":\\{[^}]*").getOrElse(-1.0)))
+        .getOrElse(ForkFailed)
     }
   }
+
+  /** CPU time of this whole JVM (every thread: tasks, JIT, GC), ns. */
+  private def processCpuNanos(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+      .getProcessCpuTime
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -197,7 +210,8 @@ object Bench {
     // scheduler warm-up) that showed 3-10x run-to-run noise at this data
     // size; the min reflects the steady-state plan the judge should see.
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    def timeInProc(name: String): Double = {
+    // (wall s, process CPU-s) of the min-wall rep; (-1, -1) if none ran
+    def timeInProc(name: String): (Double, Double) = {
       // Pseudo entries run unwarmed in a cold child JVM: phase-profiled
       // runs show the first 2-3 reps still paying the C2 storm over the
       // pipeline's generated classes (~160 CPU-s of JIT vs an 8s steady
@@ -227,40 +241,43 @@ object Bench {
         // runs of the same plan).
         System.gc()
         val t0 = System.nanoTime()
+        val c0 = processCpuNanos()
         try {
           run(name)
           val dt = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench] $name rep: $dt%.2f s")
-          Some(dt)
+          val cpu = (processCpuNanos() - c0) / 1e9
+          System.err.println(f"[bench] $name rep: $dt%.2f s, $cpu%.2f CPU-s")
+          Some((dt, cpu))
         } catch {
           case _: Throwable =>
             if (!errors.contains(name)) errors += name
             None
         }
       }
-      times.minOption.getOrElse(-1.0)
+      times.minByOption(_._1).getOrElse((-1.0, -1.0))
     }
     val results = inProcNames.map(n => n -> timeInProc(n)) ++
       forkResults.map {
-        case (n, ForkTime(t)) => n -> t
+        case (n, ForkTime(t, c)) => n -> (t, c)
         // spawn/crash: in-process fallback (no worse than pre-fork)
         case (n, ForkFailed) => n -> timeInProc(n)
         // timeout: the ENTRY is likely wedged — an in-process re-run
         // would stall the bench identically; record it as a failure
         case (n, ForkTimeout) =>
           if (!errors.contains(n)) errors += n
-          n -> -1.0
+          n -> (-1.0, -1.0)
       }
     def q(s: String) = "\"" + s + "\""
-    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    def obj(f: ((Double, Double)) => Double) =
+      results.map { case (k, v) => s"${q(k)}:${f(v)}" }.mkString("{", ",", "}")
     val errJson = errors.map(q).mkString("[", ",", "]")
     // The headline total stays the sum of the single-query set (the
     // number comparable across rounds); the pipeline runs are their
     // own entries — they re-execute the same operators and would
     // double-count them into the total.
     val total =
-      results.collect { case (n, v) if !Pseudo(n) && v >= 0 => v }.sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
+      results.collect { case (n, (v, _)) if !Pseudo(n) && v >= 0 => v }.sum
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(_._1)},"cpu":${obj(_._2)},"errors":$errJson,"sf":"$sfDir"}""")
     if (errors.nonEmpty) System.err.println(s"[bench] FAILED: $errors")
     spark.stop()
   }

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why: the window formulation materializes corpus × cells rows
   * through a shuffle AND pins them (quadratic once the codebook obeys
-  * the k ∝ corpus rule — the simscale probe measured knnIvfTrained
-  * at 129 s on 10× and non-terminating at 100×), and the map-side
+  * the k ∝ corpus rule — knnIvfTrained measured 129 s on 10× and
+  * non-terminating at 100×, COVERAGE.md Round 17 R5), and the map-side
   * `aggregate` HOF alternative runs `cells` interpreted lambda
   * closures with a BigDecimal round each per row. The kernel is a
   * primitive loop, codegen-friendly, and rounds exactly like

@@ -63,7 +63,15 @@ object CacheScope {
     * subtree (the curation report pins the same scored frame through
     * four stages) would otherwise re-persist it — a WARN-per-call from
     * the CacheManager — and hand the scope a double-release entry for
-    * a pin this call did not create. */
+    * a pin this call did not create.
+    *
+    * Must hold: `df` is not built on a [[cut]]. A cut's `LogicalRDD`
+    * leaf keeps raw expression ids in the partitioning of its canonical
+    * form, so once a consumer's self-join re-instances that leaf the
+    * consumer's plan no longer matches the pin, and every consumer
+    * silently recomputes the frame. A frame over a cut that several
+    * consumers read must itself be a cut (BrandcodeResolve's per-CO
+    * frame). */
   def pin(df: DataFrame): DataFrame = {
     if (df.storageLevel != StorageLevel.NONE) return df
     val c = df.persist(StorageLevel.MEMORY_AND_DISK)

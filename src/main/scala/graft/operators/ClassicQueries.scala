@@ -653,11 +653,11 @@ object ClassicQueries {
     outlierAudit(Tables.events(s, dir)
       .select(col("event_type"), col("value")))
 
-  /** DataFrame half of [[outliers]] (shared with ScaleProbe). The
-    * flag count is a TOTAL function — a NULL flag (singleton group:
-    * stddev_samp = NULL; or a NULL value) counts 0, exactly like the
-    * oracle's `CASE … ELSE 0` — so a group with no decidable rows
-    * reports 0, never NULL. */
+  /** DataFrame half of [[outliers]] (unit-tested on hand-built frames
+    * in ClassicAnalyticsSpec). The flag count is a TOTAL function — a
+    * NULL flag (singleton group: stddev_samp = NULL; or a NULL value)
+    * counts 0, exactly like the oracle's `CASE … ELSE 0` — so a group
+    * with no decidable rows reports 0, never NULL. */
   def outlierAudit(ev: DataFrame): DataFrame = {
     val stats = ev.groupBy(col("event_type"))
       .agg(avg(col("value")).as("mu"),
@@ -687,7 +687,8 @@ object ClassicQueries {
         col("event_type")))
       .orderBy(col("user_id"), col("session_id"))
 
-  /** DataFrame half of [[sessionPaths]] (shared with ScaleProbe). */
+  /** DataFrame half of [[sessionPaths]] (unit-tested on hand-built
+    * frames in ClassicAnalyticsSpec). */
   def sessionPathsOf(ev: DataFrame): DataFrame = {
     TemporalJoins.sessionizeByGap(ev, Seq("user_id"), "ts", gapSec = 1800L)
       .groupBy(col("user_id"), col("session_id"))

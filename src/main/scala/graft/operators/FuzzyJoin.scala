@@ -66,8 +66,8 @@ object FuzzyJoin {
     * equi-join squares. On a short, dense key space (zero-padded codes,
     * fixed-alphabet ids) the q=3 vocabulary saturates at a few thousand
     * grams, df grows linearly with rows, and the join goes quadratic
-    * (ScaleProbe `resolve`: 2.6 s → 372 s at 10×; q=5 restores ~linear
-    * — measured there). Rule of thumb: pick q so
+    * (round-12 measurement, COVERAGE.md "Scale-design notes": 2.6 s →
+    * 372 s at 10×; q=5 restored ~linear). Rule of thumb: pick q so
     * `alphabet^q >> expected row count`. Rich-entropy strings (names,
     * urls, titles) are fine at the q=3 default.
     *
@@ -204,8 +204,8 @@ object FuzzyJoin {
     * duplicate values fan in further, but m copies of one value owe
     * m² output pairs anyway). Key material is O(len²) bytes per
     * string — built for key/code/name columns, not document bodies.
-    * ScaleProbe `resolve` pins the contrast with the q-gram path on
-    * the saturating key space. */
+    * The round-12 measurement (COVERAGE.md "Scale-design notes") shows
+    * the contrast with the q-gram path on the saturating key space. */
   /** Deletion neighborhood of a string column: the string itself plus
     * every single-character deletion, distinct. `ed(a,b) <= 1` implies
     * the neighborhoods intersect (the FastSS blocking property
@@ -256,12 +256,13 @@ object FuzzyJoin {
     * for k=2 key spaces dense enough to saturate the q-gram
     * vocabulary ([[selfJoin]]'s documented failure mode).
     *
-    * Fitness note (measured, ScaleProbe `resolve` round 13): the
-    * operator is for key spaces that stay SPARSE at radius 2. On a
-    * saturating numeral space (codes a couple of digit-edits apart)
-    * the TRUE ≤2-edit pair set itself grows combinatorially with
-    * density — no blocking scheme outruns its own output; expect
-    * cost proportional to the genuine pair graph there.
+    * Fitness note (measured in round 13, COVERAGE.md "Scale-design
+    * notes"): the operator is for key spaces that stay SPARSE at
+    * radius 2. On a saturating numeral space (codes a couple of
+    * digit-edits apart) the TRUE ≤2-edit pair set itself grows
+    * combinatorially with density — no blocking scheme outruns its
+    * own output; expect cost proportional to the genuine pair graph
+    * there.
     *
     * That regime is DETECTED, not silently paid: before the candidate
     * join, one vocabulary-sized aggregate over the deletion keys

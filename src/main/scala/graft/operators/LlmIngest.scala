@@ -129,8 +129,8 @@ object LlmIngest {
     * its norm, bucketed on the cell — the same two-sided scale
     * argument as the MinHash index: the probe reads only the buckets
     * the batch's cells hash into ([[ParquetSinks.readBucketsFor]], the
-    * measured-O(batch) machinery of the `ingest` ScaleProbe), and the
-    * append rewrites only those buckets. The cell kernel is
+    * machinery measured O(batch) in COVERAGE.md, Round 10 additions
+    * #3), and the append rewrites only those buckets. The cell kernel is
     * [[LlmSim.cellRows]], shared with the batch-side operators so the
     * two sides cannot drift. Candidate generation is cell-bucketed
     * (the [[LlmSim.dedupEmbed]] screen, NOT the exact broadcast of

@@ -542,10 +542,10 @@ object LlmSim {
     * is inherently quadratic in CLUSTER SIZE — the SemDeDup bargain —
     * so `cellDims` is the knob that must grow with the corpus:
     * 2^cellDims codebook seeds, i.e. the paper's k ∝ corpus rule
-    * (134M docs / 11k clusters). The ScaleProbe emb section measures
-    * exactly this: at 10× corpus with cellDims+4 (16× the cells,
-    * ~fixed cluster size) wall time stays linear, while the fixed-k
-    * foil goes quadratic. Keep in sync with
+    * (134M docs / 11k clusters). Measured in round 10 (COVERAGE.md,
+    * Round 10 additions #11): at 10× corpus with cellDims+4 (16× the
+    * cells, ~fixed cluster size) wall time stayed linear, while the
+    * fixed-k foil went quadratic. Keep in sync with
     * [[LlmSimSql.semDedupSql]] (which pins the gate's default dims). */
   def semDedup(embeddings: DataFrame,
       exactFold: Boolean = true, cellDims: Int = IvfDims): DataFrame = {

@@ -186,10 +186,8 @@ object LlmText {
     * combine); the df filter is a groupBy(gram) count joined back
     * onto the postings — see the skew note in the body. */
   /** The candidate stage of [[dedupNgram]], from a [[shingles]] frame:
-    * postings → df cap → gram self-join → shared-gram bar. Exposed
-    * package-private so the scale probe can count candidates without
-    * re-stating the plan. */
-  private[graft] def ngramCandidates(sh: DataFrame,
+    * postings → df cap → gram self-join → shared-gram bar. */
+  private def ngramCandidates(sh: DataFrame,
       dfCap: Int = NgramDfCap, minShared: Int = NgramMinShared,
       dfCapFraction: Double = 0.0): DataFrame = {
     require(dfCapFraction >= 0 && dfCapFraction < 1,

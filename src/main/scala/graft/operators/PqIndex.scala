@@ -285,7 +285,7 @@ object Pq {
     * is BOUNDED, which a production eval/search workload is. A
     * caller whose query convention grows with the corpus (the
     * fixture's %-based split does) must scale `queryMod` to keep Q
-    * fixed, as the simscale probe does. */
+    * fixed (the recorded 100× ladder did, COVERAGE.md Round 17 R4). */
   def search(embeddings: DataFrame, exactFold: Boolean = true,
       k: Int = PqTopK,
       queryMod: Int = LlmSim.QueryMod): DataFrame = {

@@ -646,11 +646,11 @@ object TemporalJoins {
     * against the preceding row — every tied row ends up with the same
     * running-boundary count either way.
     *
-    * Scale ceiling (measured, ScaleProbe `temporal` skew shape): one
-    * key's rows are ONE task's serial scan. Past a single core's sort
-    * budget, use [[sessionizeByGapSliced]] — session ids are a
-    * running boundary count, i.e. a PREFIX SUM, which composes
-    * across time slices. */
+    * Scale ceiling (measured in round 11 on a hot-key shape,
+    * COVERAGE.md, Round 11 additions R2): one key's rows are ONE
+    * task's serial scan. Past a single core's sort budget, use
+    * [[sessionizeByGapSliced]] — session ids are a running boundary
+    * count, i.e. a PREFIX SUM, which composes across time slices. */
   def sessionizeByGap(
       df: DataFrame,
       on: Seq[String],

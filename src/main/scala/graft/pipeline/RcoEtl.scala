@@ -143,7 +143,7 @@ object RcoEtl {
 
   /** The 3-site heterogeneous fleet configuration
     * ([[graft.operators.RcoQueries.fleetSites]]) as full [[SiteParams]]
-    * — what the fleet bench entry and the scale probe drive through
+    * — what the `rco_fleet_e2e` bench entry drives through
     * [[runSites]]. */
   def fleetSiteParams: Seq[SiteParams] =
     RcoQueries.fleetSites.map { case (server, pred, sp) =>

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * ([[ParquetSinks.upsertByKeyBucketed]]); a batch reads back only the
   * buckets its keys land in ([[ParquetSinks.readBucketsFor]]) and
   * rewrites only those buckets — maintenance cost is O(batch), not
-  * O(history), measured for the sibling ingest indexes by ScaleProbe.
+  * O(history), measured for the sibling ingest indexes in round 10
+  * (COVERAGE.md, Round 10 additions #3 and #17).
   *
   * Exactly-once: callers pass a stable `batchId` (Structured
   * Streaming's `foreachBatch` epoch id, or a run id). A batch whose

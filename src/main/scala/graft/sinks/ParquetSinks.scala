@@ -120,7 +120,7 @@ object ParquetSinks {
     * [[BucketMarker]] when present. Otherwise the table predates some
     * part of this layout: if it already has [[BucketCol]] it was
     * written with the call sites' old fixed modulus — freeze
-    * `legacyDefault` into a marker; if not (dir-per-key or flat
+    * [[LegacyBuckets]] into a marker; if not (dir-per-key or flat
     * layout), the very first incremental load after an upgrade would
     * die with an AnalysisException on the missing column, so migrate
     * ONCE — rewrite the whole table into the bucketed layout sized by
@@ -130,14 +130,14 @@ object ParquetSinks {
     * telling the operator to migrate by hand) just outsources this
     * exact rewrite. */
   private def resolveBuckets(spark: SparkSession, path: String,
-      keyCol: String, legacyDefault: Int): Int = {
+      keyCol: String): Int = {
     val fs = fsOf(spark, path)
     val d = new Path(path)
     readBucketMarker(fs, d).getOrElse {
       val stored = spark.read.parquet(path)
       if (stored.columns.contains(BucketCol)) {
-        writeBucketMarker(fs, d, legacyDefault)
-        legacyDefault
+        writeBucketMarker(fs, d, LegacyBuckets)
+        LegacyBuckets
       } else {
         val n = chooseBuckets(stored.count())
         val tmp = tmpPath(path)
@@ -241,27 +241,18 @@ object ParquetSinks {
   val MinBuckets = 8
   val MaxBuckets = 1024
 
-  /** Session conf overriding [[RowsPerBucket]] at table CREATION (the
-    * modulus is then persisted in the [[BucketMarker]] as usual).
-    * Deployment tuning for row widths far from the ~few-hundred-byte
-    * assumption behind the default — and what lets ScaleProbe
-    * reproduce the at-scale bucket geometry (count grows with the
-    * table, size fixed) on probe-sized data. */
-  val RowsPerBucketConf = "graft.buckets.rowsPerBucket"
+  private[graft] def chooseBuckets(rows: Long): Int =
+    math.max(MinBuckets.toLong, math.min(MaxBuckets.toLong,
+      (rows + RowsPerBucket - 1) / RowsPerBucket)).toInt
 
-  private[graft] def chooseBuckets(rows: Long): Int = {
-    val per = SparkSession.getActiveSession
-      .flatMap(_.conf.getOption(RowsPerBucketConf)).map(_.toLong)
-      .getOrElse(RowsPerBucket)
-    math.max(MinBuckets.toLong,
-      math.min(MaxBuckets.toLong, (rows + per - 1) / per)).toInt
-  }
+  /** Modulus of bucketed tables written before the [[BucketMarker]]
+    * sidecar existed: every call site then used this fixed count. */
+  private val LegacyBuckets = 64
 
   /** Sidecar recording the table's bucket modulus (underscore-prefixed:
     * invisible to partition discovery, like `_SUCCESS`). Absent on
     * tables created before this sidecar existed — those were all
-    * written with the call sites' fixed default, which the caller
-    * passes as the fallback. */
+    * written with the call sites' fixed default, [[LegacyBuckets]]. */
   private val BucketMarker = "_graft_nbuckets"
 
   /** The marker is staged to a sibling temp name and RENAMED into
@@ -326,12 +317,9 @@ object ParquetSinks {
     * stored rows with time >= min(incoming) − pad, then append the
     * incoming rows. Only the hash buckets containing touched keys are
     * read back and rewritten; other buckets' dirs are never opened.
-    * @param numBuckets fallback modulus for tables written before the
-    *                   [[BucketMarker]] sidecar existed (those all
-    *                   used the fixed 64); new tables are sized by
-    *                   [[chooseBuckets]] at creation and the choice is
-    *                   persisted — it must be stable across loads of
-    *                   the same table.
+    * New tables are sized by [[chooseBuckets]] at creation and the
+    * choice is persisted — it must be stable across loads of the same
+    * table.
     * @param scopeCols  extra exact-match delete-key columns. The
     *                   reference's DELETE is always
     *                   `WHERE Line=... AND Server=...`
@@ -344,14 +332,14 @@ object ParquetSinks {
     *                   unchanged — scope only narrows the delete. */
   def upsertWindow(spark: SparkSession, newDf: DataFrame, path: String,
       keyCol: String, timeCol: String, padSec: Double = 10.0,
-      numBuckets: Int = 64, scopeCols: Seq[String] = Nil): Unit = {
+      scopeCols: Seq[String] = Nil): Unit = {
     healCrashedSwaps(fsOf(spark, path), path)
     cleanLegacyBackup(fsOf(spark, path), path)
     if (!exists(spark, path)) {
       createBucketed(spark, newDf, path, keyCol)
       return
     }
-    val n = resolveBuckets(spark, path, keyCol, numBuckets)
+    val n = resolveBuckets(spark, path, keyCol)
     val delKeys = scopeCols :+ keyCol
     // cast("double") lets the time axis be numeric epoch OR timestamp
     // (timestamps cast to fractional epoch seconds)
@@ -401,24 +389,8 @@ object ParquetSinks {
     *                  constant scope value, so anti-joining on
     *                  scope+key implements exactly that. */
   def replaceDedup(spark: SparkSession, newDf: DataFrame, path: String,
-      keyCol: String, scopeCols: Seq[String] = Nil): Unit = {
-    healCrashedSwaps(fsOf(spark, path), path)
-    cleanLegacyBackup(fsOf(spark, path), path)
-    if (!exists(spark, path)) {
-      newDf.write.mode(SaveMode.Append).parquet(path)
-      return
-    }
-    val delKeys = scopeCols :+ keyCol
-    val kept = spark.read.parquet(path)
-      .join(newDf.select(delKeys.map(col): _*).distinct(), delKeys,
-        "left_anti")
-    val tmp = tmpPath(path)
-    val fs = fsOf(spark, path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    kept.unionByName(newDf.select(kept.columns.map(col).toSeq: _*))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapDir(fs, tmp, new Path(path))
-  }
+      keyCol: String, scopeCols: Seq[String] = Nil): Unit =
+    upsertByKey(spark, newDf, path, scopeCols :+ keyCol)
 
   /** [[upsertByKey]] at scale: the same keyed MERGE, but the table is
     * laid out in hash buckets of `bucketCol` (one of the key columns)
@@ -427,8 +399,7 @@ object ParquetSinks {
     * per call, which a per-micro-batch streaming sink or a big daily
     * merge cannot afford. Layout matches [[upsertWindow]]. */
   def upsertByKeyBucketed(spark: SparkSession, newDf: DataFrame,
-      path: String, keyCols: Seq[String], bucketCol: String,
-      numBuckets: Int = 64): Unit = {
+      path: String, keyCols: Seq[String], bucketCol: String): Unit = {
     require(keyCols.contains(bucketCol),
       s"bucketCol $bucketCol must be one of the merge keys $keyCols")
     healCrashedSwaps(fsOf(spark, path), path)
@@ -437,7 +408,7 @@ object ParquetSinks {
       createBucketed(spark, newDf, path, bucketCol)
       return
     }
-    val n = resolveBuckets(spark, path, bucketCol, numBuckets)
+    val n = resolveBuckets(spark, path, bucketCol)
     val touched = withBucket(newDf.select(bucketCol).distinct(), bucketCol,
       n).select(BucketCol).distinct().collect().map(_.getInt(0))
     val keptOld = spark.read.parquet(path)
@@ -475,8 +446,7 @@ object ParquetSinks {
     * [[graft.streaming.StreamingCdcApply]]. */
   def applyChangesBucketed(spark: SparkSession, changes: DataFrame,
       path: String, keyCols: Seq[String], compareCols: Seq[String],
-      bucketCol: String, opCol: String = "op",
-      numBuckets: Int = 64): Unit = {
+      bucketCol: String, opCol: String = "op"): Unit = {
     require(keyCols.contains(bucketCol),
       s"bucketCol $bucketCol must be one of the merge keys $keyCols")
     val fs = fsOf(spark, path)
@@ -488,7 +458,7 @@ object ParquetSinks {
       createBucketed(spark, upserts, path, bucketCol)
       return
     }
-    val n = resolveBuckets(spark, path, bucketCol, numBuckets)
+    val n = resolveBuckets(spark, path, bucketCol)
     val touched = withBucket(changes.select(bucketCol).distinct(),
       bucketCol, n).select(BucketCol).distinct().collect()
       .map(_.getInt(0))

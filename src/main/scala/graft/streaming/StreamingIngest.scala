@@ -17,9 +17,10 @@ import graft.operators.{LlmIngest, LlmText}
   * The dedup is a stateful table operation, not a stream transform, so
   * it lives in `foreachBatch` (the documented home for per-batch sink
   * logic); the gate stays inside the streaming plan. Per micro-batch
-  * the work is O(batch + touched index buckets) — the ScaleProbe
-  * `ingest` section's measured claim — so a steady input rate gives a
-  * steady batch latency no matter how large the accepted corpus grows.
+  * the work is O(batch + touched index buckets) — measured in round 10
+  * (COVERAGE.md, Round 10 additions #3: probe bytes flat while the
+  * index grew 1×→20×) — so a steady input rate gives a steady batch
+  * latency no matter how large the accepted corpus grows.
   *
   * Crash recovery: `foreachBatch` replays the in-flight micro-batch
   * after a restart (at-least-once). Re-ingesting a batch is a no-op on

@@ -22,10 +22,11 @@ import graft.operators.{LlmIngest, LlmSim}
   * stateful table operation and lives in `foreachBatch`, exactly the
   * [[StreamingIngest]] split.
   *
-  * Per micro-batch the work is O(batch + touched index buckets) — the
-  * ScaleProbe `vecingest` section's measured claim — so batch latency
-  * stays flat as the accepted index grows (at a codebook sized for the
-  * corpus; see the `cellDims` contract on `ingestVectors`). Crash
+  * Per micro-batch the work is O(batch + touched index buckets) —
+  * measured in round 10 (COVERAGE.md, Round 10 additions #17) — so
+  * batch latency stays flat as the accepted index grows (at a
+  * codebook sized for the corpus; see the `cellDims` contract on
+  * `ingestVectors`). Crash
   * recovery and ordering inherit the [[StreamingIngest]] argument
   * verbatim: re-ingest is a proven no-op, a near-dup pair split across
   * micro-batches keeps the first-arrived vector, and within a batch

@@ -439,8 +439,9 @@ class LlmSpec extends GraftSuite {
   }
 
   test("fused kernel top-n equals the window ranking, grown dims") {
-    // the gate exercises cellDims=4 only; the ScaleProbe scale claim
-    // rests on grown codebooks, so pin kernel ≡ window at a larger k
+    // the gate exercises cellDims=4 only; the recorded scale claims
+    // (COVERAGE.md Round 17 R4) rest on grown codebooks, so pin
+    // kernel ≡ window at a larger k
     // too — full top-Nprobe ranking AND the nr=1 assignment slice
     val emb = graft.sources.Tables
       .embeddings(spark, "/root/testdata/sf0.01")

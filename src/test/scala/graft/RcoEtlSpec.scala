@@ -311,7 +311,10 @@ class RcoEtlSpec extends GraftSuite {
     spark.catalog.clearCache()
     val full = Rco.downtimeLogDeduped(Tables.events(spark, dir))
     val prod = Rco.productionLog(Tables.events(spark, dir))
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compared by id: an earlier test's unreferenced checkpoint may be
+    // garbage-collected (and so leave the map) while the fleet runs
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     val base = Files.createTempDirectory("graft-fleet-share").toString
     val log = RcoEtl.runSites(spark, Seq(
       RcoEtl.SiteParams("A", Rco.testCoPredicate,
@@ -320,7 +323,7 @@ class RcoEtlSpec extends GraftSuite {
         machineLevel = false, firstStop = false)),
       full, prod, base)
     assert(log.values.forall(_ == "Success"), log.toString)
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert((persisted -- before).isEmpty,
       "the loop-shared canonical logs must be released at fleet end")
   }
 

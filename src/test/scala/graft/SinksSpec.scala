@@ -184,19 +184,6 @@ class SinksSpec extends GraftSuite {
     assert(e.getMessage.contains("_graft_nbuckets"), e.getMessage)
   }
 
-  test("rowsPerBucket conf overrides sizing at creation only") {
-    spark.conf.set(ParquetSinks.RowsPerBucketConf, "1000")
-    try {
-      assert(ParquetSinks.chooseBuckets(100000) == 100)
-      assert(ParquetSinks.chooseBuckets(0) == ParquetSinks.MinBuckets,
-        "floor still applies under the override")
-      assert(ParquetSinks.chooseBuckets(Long.MaxValue / 4)
-        == ParquetSinks.MaxBuckets, "cap still applies under the override")
-    } finally spark.conf.unset(ParquetSinks.RowsPerBucketConf)
-    assert(ParquetSinks.chooseBuckets(100000) == ParquetSinks.MinBuckets,
-      "default sizing restored once the conf is unset")
-  }
-
   test("bucket modulus: sized at creation, persisted, stable on upsert") {
     // sizing: floor for small tables, linear in rows, capped
     assert(ParquetSinks.chooseBuckets(0) == ParquetSinks.MinBuckets)
