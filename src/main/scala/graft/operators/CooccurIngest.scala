@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sinks.ParquetSinks
+import graft.sinks.{Ledger, ParquetSinks}
 
 /** Incremental item co-occurrence — the streaming/ingest twin of
   * [[ClassicQueries.itemCooccur]]: (user, item) interactions arrive
@@ -74,20 +74,6 @@ object CooccurIngest {
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  private def applied(spark: SparkSession, table: String,
-      batchId: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$table/_applied", batchId)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def markApplied(spark: SparkSession, table: String,
-      batchId: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$table/_applied", batchId)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
   /** Test-only crash injection: when set, the matching apply step
     * throws AFTER its writes land but BEFORE its `_applied` marker —
     * the exact window the staged-delta + `last_batch` design must
@@ -97,14 +83,14 @@ object CooccurIngest {
 
   private def step(spark: SparkSession, table: String, batchId: String)(
       f: => Unit): Unit =
-    if (!applied(spark, table, batchId)) {
+    if (!Ledger.applied(spark, table, batchId)) {
       f
       if (crashAfter.exists(table.endsWith)) {
         crashAfter = None
         throw new IllegalStateException(
           s"injected crash after apply, before marker: $table")
       }
-      markApplied(spark, table, batchId)
+      Ledger.markApplied(spark, table, batchId)
     }
 
   /** Read a stored additive table, tolerating state written before
@@ -135,7 +121,7 @@ object CooccurIngest {
     val items = itemsPath(path)
     val capped = cappedPath(path)
     // basket is marked LAST: its marker means the whole batch landed
-    if (applied(spark, basket, batchId)) {
+    if (Ledger.applied(spark, basket, batchId)) {
       dropStage(spark, path, batchId)
       return
     }

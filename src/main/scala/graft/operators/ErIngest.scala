@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.ParquetSinks
+import graft.sinks.{Ledger, ParquetSinks}
 
 /** Incremental entity resolution — the ingest face of
   * [[EntityResolution]]: records arrive in batches, each batch is
@@ -47,23 +47,10 @@ object ErIngest {
 
   private def membersPath(path: String) = s"$path/members"
   private def mergesPath(path: String) = s"$path/merges"
-  private def appliedDir(path: String) = s"$path/_applied"
 
   private def exists(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  private def applied(spark: SparkSession, path: String,
-      batchId: String): Boolean =
-    exists(spark, s"${appliedDir(path)}/$batchId")
-
-  private def markApplied(spark: SparkSession, path: String,
-      batchId: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(appliedDir(path), batchId)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
   }
 
   /** The flattened merge map (old_entity, root), empty frame if none
@@ -92,7 +79,7 @@ object ErIngest {
   def ingest(spark: SparkSession, batch: DataFrame, path: String,
       idCol: String, strCol: String, batchId: String): DataFrame = {
     import spark.implicits._
-    if (applied(spark, path, batchId))
+    if (Ledger.applied(spark, path, batchId))
       return Seq.empty[(Long, Long)].toDF("id", "entity_id")
 
     val recs = batch
@@ -104,7 +91,7 @@ object ErIngest {
       ingestBody(spark, recs, merges, path)
     }
     release()
-    markApplied(spark, path, batchId)
+    Ledger.markApplied(spark, path, batchId)
     out
   }
 

@@ -722,7 +722,7 @@ object Pq {
       staging.toString, CorpusBatchId)
     fs.create(new org.apache.hadoop.fs.Path(staging, "_COMMIT"), true)
       .close()
-    commitMigration(spark, path)
+    settle(spark, path, Migration)
   }
 
   /** Finish or discard a crashed [[migrate]]: committed staging →
@@ -732,36 +732,7 @@ object Pq {
     * .applyBatch]]) call this first; a serving deployment runs it at
     * startup. */
   def healMigration(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_migrate")
-    if (!fs.exists(staging)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_COMMIT")))
-      commitMigration(spark, path)
-    else fs.delete(staging, true)
-  }
-
-  private def commitMigration(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_migrate")
-    Seq("codebook", "coarse", "baseline", "codes").foreach { c =>
-      val src = new org.apache.hadoop.fs.Path(staging, c)
-      // absent = already swapped by a previous (crashed) commit pass
-      if (fs.exists(src)) {
-        val dest = new org.apache.hadoop.fs.Path(path, c)
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.rename(src, dest)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/drift"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_applied"), true)
-    // the compaction bound indexes the RETIRED batch-id space — a new
-    // stream's ids restart at 0 and must not be refused against it
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_compacted_through"),
-      true)
-    fs.delete(staging, true)
-  }
+      path: String): Unit = settle(spark, path, Migration)
 
   /** Merge every stored batch into ONE reserved corpus batch
     * ([[CorpusBatchId]]) — the maintenance pass a long-lived streamed
@@ -814,7 +785,7 @@ object Pq {
       true).close()
     fs.create(new org.apache.hadoop.fs.Path(staging, "_COMMIT"), true)
       .close()
-    commitCompaction(spark, path)
+    settle(spark, path, Compaction)
   }
 
   /** The highest batch id a committed [[compact]] has merged into the
@@ -836,27 +807,47 @@ object Pq {
     * complete the codes swap; uncommitted → delete it (the live
     * codes are intact). No-op when no staging exists. */
   def healCompaction(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(spark, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_compact")
-    if (!fs.exists(staging)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_COMMIT")))
-      commitCompaction(spark, path)
-    else fs.delete(staging, true)
-  }
+      path: String): Unit = settle(spark, path, Compaction)
 
-  private def commitCompaction(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  /** A staged rewrite of the index ([[migrate]], [[compact]]): built
+    * under `path/<dir>` and committed by a `_COMMIT` marker there; the
+    * commit renames each of `swaps` over its live twin, then deletes
+    * every path in `retires`. `kind`/`heal` name it in errors. */
+  private case class StagedRewrite(dir: String, swaps: Seq[String],
+      retires: Seq[String], kind: String, heal: String)
+
+  private val Migration = StagedRewrite("_migrate",
+    Seq("codebook", "coarse", "baseline", "codes"),
+    // drift rows and `_applied` markers reference the RETIRED
+    // baseline/book; the compaction bound indexes the retired batch-id
+    // space — a new stream's ids restart at 0 and must not be refused
+    // against it
+    Seq("drift", "_applied", "_compacted_through"),
+    "migration", "healMigration")
+  private val Compaction = StagedRewrite("_compact",
+    Seq("codes", "_compacted_through"), Nil, "compaction", "healCompaction")
+
+  /** Finish or discard staged rewrite `s`: committed staging → complete
+    * the swap (each component only if still staged: absent = already
+    * swapped by a previous, crashed pass — so this is idempotent from
+    * any interleaving); uncommitted staging → delete it (the live
+    * index is intact). No-op when no staging exists. */
+  private def settle(spark: org.apache.spark.sql.SparkSession,
+      path: String, s: StagedRewrite): Unit = {
     val fs = fsOf(spark, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_compact")
-    Seq("codes", "_compacted_through").foreach { c =>
-      val src = new org.apache.hadoop.fs.Path(staging, c)
-      // absent = already swapped by a previous (crashed) commit pass
-      if (fs.exists(src)) {
-        val dest = new org.apache.hadoop.fs.Path(path, c)
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.rename(src, dest)
+    val staging = new org.apache.hadoop.fs.Path(path, s.dir)
+    if (!fs.exists(staging)) return
+    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_COMMIT"))) {
+      s.swaps.foreach { c =>
+        val src = new org.apache.hadoop.fs.Path(staging, c)
+        if (fs.exists(src)) {
+          val dest = new org.apache.hadoop.fs.Path(path, c)
+          if (fs.exists(dest)) fs.delete(dest, true)
+          fs.rename(src, dest)
+        }
       }
+      s.retires.foreach(r =>
+        fs.delete(new org.apache.hadoop.fs.Path(path, r), true))
     }
     fs.delete(staging, true)
   }
@@ -867,18 +858,14 @@ object Pq {
     * with its codes dir mid-replacement (compaction). (An UNcommitted
     * staging is fine — the live components are untouched.) */
   private def requireHealed(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    if (fsOf(spark, path).exists(
-        new org.apache.hadoop.fs.Path(s"$path/_migrate/_COMMIT")))
-      throw new IllegalStateException(
-        s"PQ index at $path has a committed but unapplied migration " +
-          "— run Pq.healMigration(spark, path) first")
-    if (fsOf(spark, path).exists(
-        new org.apache.hadoop.fs.Path(s"$path/_compact/_COMMIT")))
-      throw new IllegalStateException(
-        s"PQ index at $path has a committed but unapplied compaction " +
-          "— run Pq.healCompaction(spark, path) first")
-  }
+      path: String): Unit =
+    Seq(Migration, Compaction).foreach { s =>
+      if (fsOf(spark, path).exists(
+          new org.apache.hadoop.fs.Path(s"$path/${s.dir}/_COMMIT")))
+        throw new IllegalStateException(
+          s"PQ index at $path has a committed but unapplied ${s.kind} " +
+            s"— run Pq.${s.heal}(spark, path) first")
+    }
 
   private def fsOf(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.hadoop.fs.FileSystem =

@@ -44,8 +44,6 @@ object AggMaintain {
   val StateCols: Seq[String] = Seq("agg_cnt", "agg_sum", "agg_ssq",
     "agg_min", "agg_max")
 
-  private def appliedDir(path: String) = s"$path/_applied"
-
   /** One batch reduced to mergeable per-key partials. NULL keys are
     * rejected IN the plan (fail-loud, no driver pass): the keyed
     * sinks underneath merge by equi-join, and NULL never equi-matches
@@ -77,27 +75,13 @@ object AggMaintain {
         min(col("agg_min")).as("agg_min"),
         max(col("agg_max")).as("agg_max"))
 
-  private def applied(spark: SparkSession, path: String,
-      batchId: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(appliedDir(path), batchId)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def markApplied(spark: SparkSession, path: String,
-      batchId: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(appliedDir(path), batchId)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
   /** Fold one batch into the state table at `path`. Touched keys'
     * state rows are read bucket-pruned, merged with the batch's
     * partials, and upserted back — untouched buckets are never read
     * or written. */
   def maintain(spark: SparkSession, batch: DataFrame, path: String,
       keyCol: String, valueCol: String, batchId: String): Unit = {
-    if (applied(spark, path, batchId)) return
+    if (Ledger.applied(spark, path, batchId)) return
     // pin the batch partials: the fold below executes them up to three
     // times (the touched-bucket probe, the upsert's own bucket collect,
     // and the staged write) — without the pin each execution re-scans
@@ -119,7 +103,7 @@ object AggMaintain {
         }
       ParquetSinks.upsertByKeyBucketed(spark, merged, path, Seq(keyCol),
         keyCol)
-      markApplied(spark, path, batchId)
+      Ledger.markApplied(spark, path, batchId)
     } finally bp.unpersist()
   }
 

@@ -2,15 +2,16 @@ package graft.sinks
 
 import org.apache.spark.sql.SparkSession
 
-/** Retention for the `_applied/` epoch ledgers every exactly-once sink
-  * writes ([[AggMaintain]], [[graft.streaming.StreamingScd2]],
+/** The `_applied/` epoch ledgers every exactly-once sink writes
+  * ([[AggMaintain]], [[graft.streaming.StreamingScd2]],
   * [[graft.streaming.StreamingCdcApply]], [[graft.streaming
-  * .StreamingCms]], [[graft.operators.ErIngest]]): one zero-byte
-  * marker per applied micro-batch means a long-running stream leaves
-  * tens of thousands of files behind — harmless to correctness,
-  * hostile to object-store LIST calls (the marker probe each batch
-  * pays is a single `exists`, but ops tooling and table copies walk
-  * the whole dir).
+  * .StreamingCms]], [[graft.operators.ErIngest]]): the marker check
+  * ([[applied]]), its write ([[markApplied]]) and their retention
+  * ([[prune]]). One zero-byte marker per applied micro-batch means a
+  * long-running stream leaves tens of thousands of files behind —
+  * harmless to correctness, hostile to object-store LIST calls (the
+  * marker probe each batch pays is a single `exists`, but ops tooling
+  * and table copies walk the whole dir).
   *
   * Safety contract: a marker only matters while its batch can still
   * be REPLAYED. Structured Streaming replays at most the last
@@ -22,6 +23,31 @@ import org.apache.spark.sql.SparkSession
   * deleted (unknown writers keep their history).
   */
 object Ledger {
+
+  private def ledgerDir(path: String) =
+    new org.apache.hadoop.fs.Path(path, "_applied")
+
+  private def marker(spark: SparkSession, path: String, id: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(ledgerDir(path), id)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** True when batch `id` has already been applied to the table at
+    * `path` — its `_applied/<id>` marker exists. */
+  def applied(spark: SparkSession, path: String, id: String): Boolean = {
+    val (fs, p) = marker(spark, path, id)
+    fs.exists(p)
+  }
+
+  /** Record batch `id` as applied to the table at `path`. Written LAST,
+    * after every write of the batch has landed: a crash before it
+    * replays the batch, which the idempotent sinks absorb. */
+  def markApplied(spark: SparkSession, path: String, id: String): Unit = {
+    val (fs, p) = marker(spark, path, id)
+    fs.mkdirs(p.getParent)
+    fs.create(p, true).close()
+  }
 
   /** Delete all but the newest `keep` markers per namespace under
     * `path/_applied`, then — when `keepNamespaces` is bounded — drop
@@ -42,7 +68,7 @@ object Ledger {
     require(keep >= 1, s"ledgerPrune: keep must be >= 1, got $keep")
     require(keepNamespaces >= 1,
       s"ledgerPrune: keepNamespaces must be >= 1, got $keepNamespaces")
-    val dir = new org.apache.hadoop.fs.Path(path, "_applied")
+    val dir = ledgerDir(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return 0L
     val markers = fs.listStatus(dir).filter(_.isFile)

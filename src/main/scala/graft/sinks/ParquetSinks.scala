@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Load-side sinks (SURVEY §2.1 S8–S11), re-expressed over parquet
   * tables — the test-bed stand-in for the reference's Azure SQL sinks
@@ -14,14 +13,20 @@ import org.apache.spark.sql.types.StructType
   * overlapping windows, then delete+append,
   * `ref/RCO_Overall_orchestrator.R:304-317`). SinksSpec asserts this.
   *
-  * Scale notes: [[upsertWindow]] partitions the table by the upsert key
-  * and rewrites only the partitions it touches — the parquet analogue
-  * of the reference's per-line windowed DELETE. Rewriting sinks never
-  * overwrite the path they are reading: output is staged to a sibling
-  * `__tmp` dir and swapped in by rename only after the write action has
-  * fully completed, so a mid-write failure leaves the original table
-  * intact (on a transactional table format this would be a MERGE /
-  * replaceWhere commit instead).
+  * Every rewrite has one of two shapes, and never overwrites the path
+  * it is reading: output is staged to a sibling `__tmp` dir and swapped
+  * in by rename only after the write action has fully completed, so a
+  * mid-write failure leaves the original table intact (on a
+  * transactional table format this would be a MERGE / replaceWhere
+  * commit instead).
+  *  - TOUCHED BUCKETS ([[rewriteBuckets]]): the bucketed sinks
+  *    ([[upsertWindow]], [[upsertByKeyBucketed]], [[applyChangesBucketed]],
+  *    bucketed [[deleteKeys]]) hash the table by the upsert key and read
+  *    back, filter and swap only the buckets the incoming keys land in —
+  *    the parquet analogue of the reference's per-line windowed DELETE.
+  *  - WHOLE TABLE ([[replaceTable]]): table creation and layout
+  *    migration, and the flat sinks ([[upsertByKey]], flat
+  *    [[deleteKeys]], [[migrateLayout]]) for small metadata tables.
   */
 object ParquetSinks {
 
@@ -63,57 +68,52 @@ object ParquetSinks {
     if (fs.exists(backup)) fs.delete(backup, true)
   }
 
-  private def tmpPath(dest: String): Path = {
-    val d = new Path(dest)
-    new Path(d.getParent, d.getName + "__tmp")
+  /** Run `write` into the table's fresh sibling `__tmp` staging dir
+    * (a leftover from a crashed run is cleared first) and return it. */
+  private def stage(fs: FileSystem, path: String)(write: String => Unit)
+      : Path = {
+    val d = new Path(path)
+    val tmp = new Path(d.getParent, d.getName + "__tmp")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    write(tmp.toString)
+    tmp
   }
 
-  /** Early staged-rewrite versions of these sinks parked the previous
-    * table as a `NAME__old` sibling (no leading underscore); a crash
-    * between the two renames could leave one behind, and the current
-    * cleanup only sweeps `_bak_*`. Delete any such leftover so a table
-    * written by an older deployment doesn't carry a stale full copy of
-    * itself forever — but ONLY when the live table exists. The legacy
-    * swap renamed dest aside BEFORE renaming tmp into place, so a crash
-    * between those two renames leaves `__old` as the SOLE copy of the
-    * table; deleting it then would silently re-create the table from
-    * just the incoming batch. Restore it instead. */
-  private def cleanLegacyBackup(fs: FileSystem, dest: String): Unit = {
-    val d = new Path(dest)
-    val legacy = new Path(d.getParent, d.getName + "__old")
-    if (fs.exists(legacy)) {
-      if (fs.exists(d)) { fs.delete(legacy, true); () }
-      else if (!fs.rename(legacy, d))
-        sys.error(s"sink: could not restore legacy backup $legacy to $d")
-    }
-  }
+  /** The whole-table rewrite: stage `write`, swap it in as the table. */
+  private def replaceTable(fs: FileSystem, path: String)(
+      write: String => Unit): Unit =
+    swapDir(fs, stage(fs, path)(write), new Path(path))
 
-  /** Heal crashed swaps before a table is read or written: a `_bak_X`
-    * whose live `X` is MISSING is the sole surviving copy — the swap
-    * crashed between its two renames — so restore it; one whose `X`
-    * exists is a completed swap's leftover, safe to sweep. Applies at
-    * BOTH swap granularities: the whole-table backup (a `_bak_<table>`
-    * sibling of the table dir) and the per-bucket backups inside the
-    * table root (`_bak_graft_bucket=N`, from the upsert's per-bucket
-    * swaps). Without the restore, the next load would read the table
-    * with a silent hole where the bucket was — its kept-rows pass
-    * would then treat the missing history as deleted, and the next
-    * swap of that bucket would delete the backup: permanent loss
-    * (the `NAME__old` pathology, one directory level down). */
-  private def healCrashedSwaps(fs: FileSystem, dest: String): Unit = {
-    def heal(bak: Path): Unit = {
-      val live = new Path(bak.getParent,
-        bak.getName.stripPrefix("_bak_"))
+  /** Heal crashed swaps before a table is read or written — every
+    * sink's first step. A backup whose live dir is MISSING is the sole
+    * surviving copy (the swap crashed between its two renames), so it
+    * is restored; one whose live dir exists is a completed swap's
+    * leftover, safe to sweep. Three kinds:
+    *  - `_bak_<table>`, the whole-table backup of [[swapDir]];
+    *  - `<table>__old`, left by early staged-rewrite versions of these
+    *    sinks, which renamed the table aside BEFORE renaming tmp into
+    *    place: a table written by an older deployment must not carry a
+    *    stale full copy of itself forever, and deleting an `__old` that
+    *    is the only copy would silently re-create the table from just
+    *    the incoming batch;
+    *  - `_bak_graft_bucket=N` inside the table root, from the per-bucket
+    *    swaps. Without the restore, the next load would read the table
+    *    with a silent hole where the bucket was — its kept-rows pass
+    *    would treat the missing history as deleted, and the next swap
+    *    of that bucket would delete the backup: permanent loss (the
+    *    `NAME__old` pathology, one directory level down). */
+  private def healTable(fs: FileSystem, dest: String): Unit = {
+    def heal(bak: Path, live: Path): Unit =
       if (fs.exists(live)) { fs.delete(bak, true); () }
       else if (!fs.rename(bak, live))
         sys.error(s"sink: could not restore crashed-swap backup $bak")
-    }
     val d = new Path(dest)
-    val sibling = new Path(d.getParent, "_bak_" + d.getName)
-    if (fs.exists(sibling)) heal(sibling)
+    Seq(new Path(d.getParent, "_bak_" + d.getName),
+      new Path(d.getParent, d.getName + "__old"))
+      .filter(fs.exists).foreach(heal(_, d))
     if (fs.exists(d))
-      fs.listStatus(d).map(_.getPath)
-        .filter(_.getName.startsWith("_bak_")).foreach(heal)
+      fs.listStatus(d).map(_.getPath).filter(_.getName.startsWith("_bak_"))
+        .foreach(b => heal(b, new Path(d, b.getName.stripPrefix("_bak_"))))
   }
 
   /** Resolve the bucket modulus of an EXISTING table: the stored
@@ -124,57 +124,42 @@ object ParquetSinks {
     * layout), the very first incremental load after an upgrade would
     * die with an AnalysisException on the missing column, so migrate
     * ONCE — rewrite the whole table into the bucketed layout sized by
-    * [[chooseBuckets]] (staged to `__tmp` and swapped in, the same
-    * crash safety as every other rewrite here). O(table), paid a
-    * single time per table — the alternative (failing with a message
-    * telling the operator to migrate by hand) just outsources this
-    * exact rewrite. */
+    * [[chooseBuckets]] (the same staged create as a new table). O(table),
+    * paid a single time per table — the alternative (failing with a
+    * message telling the operator to migrate by hand) just outsources
+    * this exact rewrite. */
   private def resolveBuckets(spark: SparkSession, path: String,
       keyCol: String): Int = {
     val fs = fsOf(spark, path)
-    val d = new Path(path)
-    readBucketMarker(fs, d).getOrElse {
+    readBucketMarker(fs, new Path(path)).getOrElse {
       val stored = spark.read.parquet(path)
       if (stored.columns.contains(BucketCol)) {
-        writeBucketMarker(fs, d, LegacyBuckets)
+        writeBucketMarker(fs, new Path(path), LegacyBuckets)
         LegacyBuckets
-      } else {
-        val n = chooseBuckets(stored.count())
-        val tmp = tmpPath(path)
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        writePartitioned(withBucket(stored, keyCol, n), BucketCol,
-          SaveMode.Overwrite, tmp.toString, numBuckets = n)
-        // marker travels INSIDE the staged dir: data and modulus appear
-        // together in one rename — a crash can never leave a bucketed
-        // table whose modulus the next load has to guess
-        writeBucketMarker(fs, tmp, n)
-        swapDir(fs, tmp, d)
-        n
-      }
+      } else createBucketed(fs, path, stored, keyCol)
     }
   }
 
-  /** First write of a bucketed table: size the modulus from the batch
-    * ([[chooseBuckets]]; one count against the typically-already-cached
-    * frame), stage data + [[BucketMarker]] into `__tmp`, swap in by ONE
-    * rename. Data and modulus appear together atomically — a crash mid
-    * create leaves only a staging dir (swept on the next run), never a
-    * bucketed table whose modulus the next load has to guess, and never
-    * a partial table a blind `Append` would double. */
-  private def createBucketed(spark: SparkSession, newDf: DataFrame,
-      path: String, keyCol: String): Unit = {
-    val fs = fsOf(spark, path)
-    val n = chooseBuckets(newDf.count())
-    val tmp = tmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writePartitioned(withBucket(newDf, keyCol, n), BucketCol,
-      SaveMode.Overwrite, tmp.toString, numBuckets = n)
-    writeBucketMarker(fs, tmp, n)
-    swapDir(fs, tmp, new Path(path))
+  /** Write `df` as the whole bucketed table at `path` and return its
+    * modulus: sized from the rows ([[chooseBuckets]]; one count against
+    * the typically-already-cached frame), data + [[BucketMarker]] staged
+    * together and swapped in by ONE rename. Data and modulus appear
+    * together atomically — a crash mid create leaves only a staging dir
+    * (swept on the next run), never a bucketed table whose modulus the
+    * next load has to guess, and never a partial table a blind `Append`
+    * would double. */
+  private def createBucketed(fs: FileSystem, path: String, df: DataFrame,
+      keyCol: String): Int = {
+    val n = chooseBuckets(df.count())
+    replaceTable(fs, path) { tmp =>
+      writePartitioned(withBucket(df, keyCol, n), tmp, n)
+      writeBucketMarker(fs, new Path(tmp), n)
+    }
+    n
   }
 
-  /** Partitioned write with the rows first clustered BY the partition
-    * key: without this every task carrying every key emits its own file
+  /** Write partitioned by [[BucketCol]] with the rows first clustered BY
+    * it: without this every task carrying every key emits its own file
     * per `key=value` dir — at 1,500 keys × 32 tasks that is ~48k tiny
     * files and a 6-30s commit per table (measured at sf0.1). Clustering
     * makes it exactly one file per partition dir while keeping all
@@ -184,18 +169,17 @@ object ParquetSinks {
     * `repartition(col)` lets AQE coalesce the (tiny) shuffle to ONE
     * task, which then pays the ~10 ms/file writer-init cost for every
     * key sequentially — measured 20 s for a 7.5k-row table with 1,500
-    * keys. The pinned count is the BUCKET MODULUS when the caller
-    * knows it (more tasks than buckets are guaranteed-empty: the hash
-    * of k distinct bucket values occupies at most k partitions),
-    * otherwise the session's shuffle parallelism. At cluster scale a
-    * single giant key would want an added salt column — keys here are
-    * production lines, bounded by line throughput. */
-  private def writePartitioned(df: DataFrame, keyCol: String,
-      mode: SaveMode, path: String, numBuckets: Int = -1): Unit = {
+    * keys. The pinned count is the BUCKET MODULUS, capped at the
+    * session's shuffle parallelism (more tasks than buckets are
+    * guaranteed-empty: the hash of k distinct bucket values occupies at
+    * most k partitions). At cluster scale a single giant key would want
+    * an added salt column — keys here are production lines, bounded by
+    * line throughput. */
+  private def writePartitioned(df: DataFrame, path: String,
+      numBuckets: Int): Unit = {
     val sess = df.sparkSession.sessionState.conf.numShufflePartitions
-    val n = if (numBuckets > 0) math.min(numBuckets, sess) else sess
-    df.repartition(n, col(keyCol))
-      .write.partitionBy(keyCol).mode(mode).parquet(path)
+    df.repartition(math.min(numBuckets, sess), col(BucketCol))
+      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(path)
   }
 
   /** S8: schema-aligned append (`App/etl/overall_etl.py:12-43`,
@@ -312,6 +296,61 @@ object ParquetSinks {
     df.withColumn(BucketCol,
       pmod(xxhash64(col(keyCol)), lit(numBuckets)).cast("int"))
 
+  /** The buckets `keys`' `keyCol` values hash into (one small collect:
+    * one row per distinct key before the bucket dedup). */
+  private def bucketsOf(keys: DataFrame, keyCol: String, n: Int): Seq[Int] =
+    withBucket(keys.select(col(keyCol)).distinct(), keyCol, n)
+      .select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
+
+  /** The touched-bucket rewrite behind every bucketed sink. Heals the
+    * table; a missing table is created from `added` (nothing to keep).
+    * Otherwise only the buckets `touchedBy`'s `bucketCol` values hash
+    * into are read back; the stored rows `keep` lets through plus
+    * `added` (in the kept rows' column order) are staged and swapped in
+    * per bucket; untouched buckets are never read or rewritten. `keep`
+    * is only planned against an existing table, so an incoming frame
+    * missing a column it names still creates a new table. */
+  private def rewriteBuckets(spark: SparkSession, path: String,
+      bucketCol: String, touchedBy: DataFrame, added: Option[DataFrame])(
+      keep: DataFrame => DataFrame): Unit = {
+    val fs = fsOf(spark, path)
+    healTable(fs, path)
+    if (!fs.exists(new Path(path))) {
+      added.foreach(createBucketed(fs, path, _, bucketCol))
+      return
+    }
+    val n = resolveBuckets(spark, path, bucketCol)
+    val touched = bucketsOf(touchedBy, bucketCol, n)
+    val kept = keep(spark.read.parquet(path)
+      .filter(col(BucketCol).isin(touched: _*)))
+    val rows = added.fold(kept)(a => kept.unionByName(
+      withBucket(a, bucketCol, n).select(kept.columns.map(col).toSeq: _*)))
+    val tmp = stage(fs, path)(writePartitioned(rows, _, n))
+    val staged = fs.listStatus(tmp).filter(_.isDirectory)
+      .map(_.getPath.getName).toSet
+    staged.foreach { name =>
+      swapDir(fs, new Path(tmp, name), new Path(path, name))
+    }
+    // delete-emptied buckets: touched but nothing staged back
+    touched.map(b => s"$BucketCol=$b").filterNot(staged).foreach { name =>
+      val dead = new Path(path, name)
+      if (fs.exists(dead)) fs.delete(dead, true)
+    }
+    // a fully-emptied table must stay READABLE: leave one zero-row
+    // file (data schema, partition value from the dir name) behind —
+    // staged under tmp and swapped in like every other partition, so
+    // a crash mid-write never leaves a partial live dir behind
+    if (!fs.listStatus(new Path(path)).exists(st => st.isDirectory &&
+        st.getPath.getName.startsWith(s"$BucketCol="))) {
+      val zeroTmp = new Path(tmp, s"$BucketCol=0")
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        rows.drop(BucketCol).schema)
+        .write.mode(SaveMode.Overwrite).parquet(zeroTmp.toString)
+      swapDir(fs, zeroTmp, new Path(path, s"$BucketCol=0"))
+    }
+    fs.delete(tmp, true)
+  }
+
   /** S9: windowed delete-then-append upsert
     * (`ref/RCO_Overall_orchestrator.R:286-499`): per upsert key, delete
     * stored rows with time >= min(incoming) − pad, then append the
@@ -332,50 +371,24 @@ object ParquetSinks {
     *                   unchanged — scope only narrows the delete. */
   def upsertWindow(spark: SparkSession, newDf: DataFrame, path: String,
       keyCol: String, timeCol: String, padSec: Double = 10.0,
-      scopeCols: Seq[String] = Nil): Unit = {
-    healCrashedSwaps(fsOf(spark, path), path)
-    cleanLegacyBackup(fsOf(spark, path), path)
-    if (!exists(spark, path)) {
-      createBucketed(spark, newDf, path, keyCol)
-      return
+      scopeCols: Seq[String] = Nil): Unit =
+    rewriteBuckets(spark, path, keyCol, newDf, Some(newDf)) { stored =>
+      val delKeys = scopeCols :+ keyCol
+      // cast("double") lets the time axis be numeric epoch OR timestamp
+      // (timestamps cast to fractional epoch seconds)
+      val bounds = newDf.groupBy(delKeys.map(col): _*)
+        .agg((min(col(timeCol).cast("double")) - padSec).as("__threshold"))
+      // Left join: unkeyed rows sharing a touched bucket survive as-is;
+      // touched keys keep only rows before their window threshold.
+      // `bounds` is one row per incoming KEY (production lines — small
+      // by nature), so the broadcast hint is safe; a table whose upsert
+      // keys ran to the tens of millions would drop the hint and let
+      // AQE pick the join side at runtime.
+      stored.join(broadcast(bounds), delKeys, "left")
+        .filter(col("__threshold").isNull ||
+          col(timeCol).cast("double") < col("__threshold"))
+        .drop("__threshold")
     }
-    val n = resolveBuckets(spark, path, keyCol)
-    val delKeys = scopeCols :+ keyCol
-    // cast("double") lets the time axis be numeric epoch OR timestamp
-    // (timestamps cast to fractional epoch seconds)
-    val bounds = newDf.groupBy(delKeys.map(col): _*)
-      .agg((min(col(timeCol).cast("double")) - padSec).as("__threshold"))
-    // Buckets the incoming keys hash into: only these partition dirs
-    // are read (pruned scan) and rewritten (staged + swapped).
-    val touched = withBucket(bounds, keyCol, n)
-      .select(BucketCol).distinct().collect().map(_.getInt(0))
-    // Left join: unkeyed rows sharing a touched bucket survive as-is;
-    // touched keys keep only rows before their window threshold.
-    // `bounds` is one row per incoming KEY (production lines — small by
-    // nature), so the broadcast hint is safe; a table whose upsert keys
-    // ran to the tens of millions would drop the hint and let AQE pick
-    // the join side at runtime.
-    val keptOld = spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .join(broadcast(bounds), delKeys, "left")
-      .filter(col("__threshold").isNull ||
-        col(timeCol).cast("double") < col("__threshold"))
-      .drop("__threshold")
-    val tmp = tmpPath(path)
-    val fs = fsOf(spark, path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writePartitioned(
-      keptOld.unionByName(
-        withBucket(newDf, keyCol, n)
-          .select(keptOld.columns.map(col).toSeq: _*)),
-      BucketCol, SaveMode.Overwrite, tmp.toString, numBuckets = n)
-    // Swap each touched `graft_bucket=N` dir into the live table;
-    // untouched buckets are never read or rewritten.
-    fs.listStatus(tmp).filter(_.isDirectory).foreach { st =>
-      swapDir(fs, st.getPath, new Path(path, st.getPath.getName))
-    }
-    fs.delete(tmp, true)
-  }
 
   /** S10: full-replace-with-dedup
     * (`ref/RCO_Overall_orchestrator.R:556-585`): stored rows whose key
@@ -402,31 +415,9 @@ object ParquetSinks {
       path: String, keyCols: Seq[String], bucketCol: String): Unit = {
     require(keyCols.contains(bucketCol),
       s"bucketCol $bucketCol must be one of the merge keys $keyCols")
-    healCrashedSwaps(fsOf(spark, path), path)
-    cleanLegacyBackup(fsOf(spark, path), path)
-    if (!exists(spark, path)) {
-      createBucketed(spark, newDf, path, bucketCol)
-      return
-    }
-    val n = resolveBuckets(spark, path, bucketCol)
-    val touched = withBucket(newDf.select(bucketCol).distinct(), bucketCol,
-      n).select(BucketCol).distinct().collect().map(_.getInt(0))
-    val keptOld = spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .join(newDf.select(keyCols.map(col): _*).distinct(), keyCols,
-        "left_anti")
-    val tmp = tmpPath(path)
-    val fs = fsOf(spark, path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writePartitioned(
-      keptOld.unionByName(
-        withBucket(newDf, bucketCol, n)
-          .select(keptOld.columns.map(col).toSeq: _*)),
-      BucketCol, SaveMode.Overwrite, tmp.toString, numBuckets = n)
-    fs.listStatus(tmp).filter(_.isDirectory).foreach { st =>
-      swapDir(fs, st.getPath, new Path(path, st.getPath.getName))
-    }
-    fs.delete(tmp, true)
+    rewriteBuckets(spark, path, bucketCol, newDf, Some(newDf))(
+      _.join(newDf.select(keyCols.map(col): _*).distinct(), keyCols,
+        "left_anti"))
   }
 
   /** Apply an I/D/U changelog (the [[graft.operators.SnapshotDiff
@@ -437,9 +428,7 @@ object ParquetSinks {
     * key is removed from its bucket, then only the non-`D` rows'
     * after-images are re-added, so `D` ops physically delete. Only
     * the buckets the incoming keys land in are read back and
-    * rewritten. A bucket whose rows are ALL deleted (nothing
-    * re-added) produces no staged directory, so its stale directory
-    * is dropped explicitly rather than left behind by the swap loop.
+    * rewritten; a bucket whose rows are ALL deleted is dropped.
     *
     * The caller folds multi-op batches to one op per key first (a
     * changelog between two snapshots has at most one); see
@@ -449,96 +438,35 @@ object ParquetSinks {
       bucketCol: String, opCol: String = "op"): Unit = {
     require(keyCols.contains(bucketCol),
       s"bucketCol $bucketCol must be one of the merge keys $keyCols")
-    val fs = fsOf(spark, path)
-    healCrashedSwaps(fs, path)
-    cleanLegacyBackup(fs, path)
-    val outCols = (keyCols ++ compareCols).map(col)
-    val upserts = changes.filter(col(opCol) =!= "D").select(outCols: _*)
-    if (!exists(spark, path)) {
-      createBucketed(spark, upserts, path, bucketCol)
-      return
-    }
-    val n = resolveBuckets(spark, path, bucketCol)
-    val touched = withBucket(changes.select(bucketCol).distinct(),
-      bucketCol, n).select(BucketCol).distinct().collect()
-      .map(_.getInt(0))
-    val keptOld = spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
-      .join(changes.select(keyCols.map(col): _*).distinct(), keyCols,
-        "left_anti")
-    val tmp = tmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writePartitioned(
-      keptOld.unionByName(
-        withBucket(upserts, bucketCol, n)
-          .select(keptOld.columns.map(col).toSeq: _*)),
-      BucketCol, SaveMode.Overwrite, tmp.toString, numBuckets = n)
-    swapTouchedBuckets(spark, tmp, path, touched.toSeq, upserts.schema)
+    val upserts = changes.filter(col(opCol) =!= "D")
+      .select((keyCols ++ compareCols).map(col): _*)
+    rewriteBuckets(spark, path, bucketCol, changes, Some(upserts))(
+      _.join(changes.select(keyCols.map(col): _*).distinct(), keyCols,
+        "left_anti"))
   }
 
   /** Delete every stored row whose `keys.columns` equal one row of
     * `keys` — the reference's per-line `DELETE WHERE Line=... AND
     * Server=...` with no append after it. A bucketed table (one with a
-    * [[BucketMarker]]) rewrites only the buckets the keys' `keyCol` —
-    * the column the table is bucketed by — hashes into; a flat table
-    * is rewritten whole. No-op when the table does not exist. */
+    * [[BucketMarker]] or a [[BucketCol]]) rewrites only the buckets the
+    * keys' `keyCol` — the column the table is bucketed by — hashes
+    * into; a flat table is rewritten whole and stays flat. No-op when
+    * the table does not exist. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): Unit = {
     require(keys.columns.contains(keyCol),
       s"keyCol $keyCol must be one of the delete keys ${keys.columns}")
     val fs = fsOf(spark, path)
-    healCrashedSwaps(fs, path)
-    cleanLegacyBackup(fs, path)
-    if (!exists(spark, path)) return
-    val tmp = tmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val stored = spark.read.parquet(path)
+    healTable(fs, path)
+    if (!fs.exists(new Path(path))) return
     def kept(rows: DataFrame): DataFrame = rows
       .join(keys.distinct(), keys.columns.toSeq, "left_anti")
-      .select(stored.columns.map(col).toSeq: _*)
-    readBucketMarker(fs, new Path(path)) match {
-      case Some(n) =>
-        val touched = withBucket(keys.select(keyCol).distinct(), keyCol, n)
-          .select(BucketCol).distinct().collect().map(_.getInt(0))
-        writePartitioned(kept(stored.filter(col(BucketCol)
-          .isin(touched.toSeq: _*))), BucketCol, SaveMode.Overwrite,
-          tmp.toString, numBuckets = n)
-        swapTouchedBuckets(spark, tmp, path, touched.toSeq,
-          stored.drop(BucketCol).schema)
-      case None =>
-        kept(stored).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapDir(fs, tmp, new Path(path))
-    }
-  }
-
-  /** Swap the bucket dirs staged under `tmp` into the table at `path`
-    * and drop touched buckets that staged nothing back; `schema` is the
-    * data schema without the bucket column. */
-  private def swapTouchedBuckets(spark: SparkSession, tmp: Path,
-      path: String, touched: Seq[Int], schema: StructType): Unit = {
-    val fs = fsOf(spark, path)
-    val staged = fs.listStatus(tmp).filter(_.isDirectory)
-      .map(_.getPath.getName).toSet
-    staged.foreach { name =>
-      swapDir(fs, new Path(tmp, name), new Path(path, name))
-    }
-    // delete-emptied buckets: touched but nothing staged back
-    touched.map(b => s"$BucketCol=$b").filterNot(staged).foreach { name =>
-      val dead = new Path(path, name)
-      if (fs.exists(dead)) fs.delete(dead, true)
-    }
-    // a fully-emptied table must stay READABLE: leave one zero-row
-    // file (data schema, partition value from the dir name) behind —
-    // staged under tmp and swapped in like every other partition, so
-    // a crash mid-write never leaves a partial live dir behind
-    if (!fs.listStatus(new Path(path)).exists(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$BucketCol="))) {
-      val zeroTmp = new Path(tmp, s"$BucketCol=0")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(zeroTmp.toString)
-      swapDir(fs, zeroTmp, new Path(path, s"$BucketCol=0"))
-    }
-    fs.delete(tmp, true)
+      .select(rows.columns.map(col).toSeq: _*)
+    lazy val stored = spark.read.parquet(path)
+    if (readBucketMarker(fs, new Path(path)).isEmpty &&
+        !stored.columns.contains(BucketCol))
+      replaceTable(fs, path)(kept(stored).write.parquet(_))
+    else rewriteBuckets(spark, path, keyCol, keys, None)(kept)
   }
 
   /** Bucket-pruned read of a bucketed table: only the hash buckets the
@@ -553,14 +481,12 @@ object ParquetSinks {
   def readBucketsFor(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame): DataFrame = {
     val fs = fsOf(spark, path)
-    healCrashedSwaps(fs, path)
+    healTable(fs, path)
     val n = readBucketMarker(fs, new Path(path)).getOrElse(sys.error(
       s"readBucketsFor: $path has no $BucketMarker sidecar — not a " +
         "bucketed table"))
-    val touched = withBucket(keys.select(col(keyCol)).distinct(), keyCol, n)
-      .select(BucketCol).distinct().collect().map(_.getInt(0))
     spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched.toSeq: _*))
+      .filter(col(BucketCol).isin(bucketsOf(keys, keyCol, n): _*))
   }
 
   /** One-time layout migration hook: read the stored table, and when
@@ -573,16 +499,11 @@ object ParquetSinks {
     * AnalysisException on the first load after an upgrade. */
   def migrateLayout(spark: SparkSession, path: String)(
       transform: DataFrame => Option[DataFrame]): Unit = {
-    if (!exists(spark, path)) return
-    healCrashedSwaps(fsOf(spark, path), path)
-    cleanLegacyBackup(fsOf(spark, path), path)
-    transform(spark.read.parquet(path)).foreach { migrated =>
-      val tmp = tmpPath(path)
-      val fs = fsOf(spark, path)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      migrated.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapDir(fs, tmp, new Path(path))
-    }
+    val fs = fsOf(spark, path)
+    healTable(fs, path)
+    if (!fs.exists(new Path(path))) return
+    transform(spark.read.parquet(path)).foreach(migrated =>
+      replaceTable(fs, path)(migrated.write.parquet(_)))
   }
 
   /** S11: metadata upsert (`App/etl/overall_etl.py:186-232`,
@@ -593,20 +514,16 @@ object ParquetSinks {
     * grows with the data. */
   def upsertByKey(spark: SparkSession, newDf: DataFrame, path: String,
       keyCols: Seq[String]): Unit = {
-    healCrashedSwaps(fsOf(spark, path), path)
-    cleanLegacyBackup(fsOf(spark, path), path)
-    if (!exists(spark, path)) {
+    val fs = fsOf(spark, path)
+    healTable(fs, path)
+    if (!fs.exists(new Path(path))) {
       newDf.write.mode(SaveMode.Append).parquet(path)
       return
     }
     val kept = spark.read.parquet(path)
       .join(newDf.select(keyCols.map(col): _*).distinct(), keyCols,
         "left_anti")
-    val tmp = tmpPath(path)
-    val fs = fsOf(spark, path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    kept.unionByName(newDf.select(kept.columns.map(col).toSeq: _*))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapDir(fs, tmp, new Path(path))
+    replaceTable(fs, path)(kept.unionByName(
+      newDf.select(kept.columns.map(col).toSeq: _*)).write.parquet(_))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sinks.ParquetSinks
+import graft.sinks.{Ledger, ParquetSinks}
 
 /** Streaming twin of [[graft.operators.SnapshotDiff.applyChanges]]:
   * an I/D/U changelog STREAM (the `diffFull` shape plus a monotonic
@@ -63,10 +63,7 @@ object StreamingCdcApply {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val id = s"${ns}_$epochId"
-          val marker = new org.apache.hadoop.fs.Path(s"$path/_applied", id)
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
+          if (!Ledger.applied(spark, path, id)) {
             val latest = batch.toDF()
               .filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
               .withColumn("__rn", row_number().over(
@@ -77,8 +74,7 @@ object StreamingCdcApply {
               .drop("__rn")
             ParquetSinks.applyChangesBucketed(spark, latest, path,
               keyCols, compareCols, bucketCol, opCol)
-            fs.mkdirs(marker.getParent)
-            fs.create(marker, true).close()
+            Ledger.markApplied(spark, path, id)
           }
         }
       }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sinks.ParquetSinks
+import graft.sinks.{Ledger, ParquetSinks}
 
 /** Streaming twin of [[graft.operators.LlmPrep.decontaminate]]'s
   * REMOVAL half: contamination FLAGS arrive as a stream (the
@@ -49,10 +49,9 @@ object StreamingDecontaminate {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val id = s"${ns}_$epochId"
-          val marker = new org.apache.hadoop.fs.Path(s"$path/_applied", id)
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+          val table = new org.apache.hadoop.fs.Path(path)
+          if (!table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(table)) {
             // flags arriving before the corpus table exists: a delete
             // against nothing is a no-op by the operator's own
             // anti-join semantics — skip WITHOUT writing anything
@@ -63,7 +62,7 @@ object StreamingDecontaminate {
               s"StreamingDecontaminate: corpus $path does not exist " +
                 s"yet — batch $id is a no-op (flagged ids have " +
                 "nothing to delete)")
-          } else if (!fs.exists(marker)) {
+          } else if (!Ledger.applied(spark, path, id)) {
             // after-image columns: everything stored beyond the key
             // and the bucket partition column, NULL-typed from the
             // stored schema (a D op never reads them)
@@ -79,8 +78,7 @@ object StreamingDecontaminate {
             }
             ParquetSinks.applyChangesBucketed(spark, dels, path,
               Seq(idCol), compareCols, idCol)
-            fs.mkdirs(marker.getParent)
-            fs.create(marker, true).close()
+            Ledger.markApplied(spark, path, id)
           }
         }
       }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Pq
+import graft.sinks.Ledger
 
 /** Streaming PQ encoding against a FROZEN codebook — the steady-state
   * loop of a compressed vector store: [[graft.operators.Pq.freeze]]
@@ -58,22 +59,6 @@ object StreamingPqEncode {
     * error reaches 1.5× the bootstrap baseline. */
   val RetrainRatio = 1.5
 
-  private def applied(spark: SparkSession, path: String,
-      batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_applied",
-      s"pqenc_$batchId")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def mark(spark: SparkSession, path: String,
-      batchId: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_applied")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir, s"pqenc_$batchId"),
-      true).close()
-  }
-
   /** Encode one batch against the frozen books at `path`, write
     * packed+celled codes and the drift row idempotently, return the
     * codes written (read back from the table on a fast-path replay,
@@ -104,7 +89,7 @@ object StreamingPqEncode {
     // would duplicate them beside it
     if (Pq.compactedThrough(spark, path).exists(batchId <= _))
       return readBack
-    if (applied(spark, path, batchId)) return readBack
+    if (Ledger.applied(spark, path, s"pqenc_$batchId")) return readBack
     val (cvsL, bbsL) = Pq.frozenCodebook(spark, path)
     val (cIds, cCvs, cNorms) = Pq.frozenCoarse(spark, path)
     Pq.writeCodes(
@@ -149,7 +134,7 @@ object StreamingPqEncode {
           s"${r.getAs[Double]("drift_ratio")}x the frozen baseline " +
           s"(threshold $retrainRatio) — run Pq.migrate")
     }
-    mark(spark, path, batchId)
+    Ledger.markApplied(spark, path, s"pqenc_$batchId")
     readBack
   }
 

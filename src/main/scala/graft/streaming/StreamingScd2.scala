@@ -104,10 +104,7 @@ object StreamingScd2 {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val id = s"${ns}_$epochId"
-          val marker = new org.apache.hadoop.fs.Path(s"$path/_applied", id)
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
+          if (!graft.sinks.Ledger.applied(spark, path, id)) {
             // a version that opens AND closes inside one batch emits
             // two events for the same (k, validFrom) — fold to the
             // final one (max ignores the open event's NULL validTo;
@@ -120,8 +117,7 @@ object StreamingScd2 {
                 first(col("ride")).as("ride"))
             graft.sinks.ParquetSinks.upsertByKeyBucketed(spark,
               latest, path, Seq("k", "validFrom"), "k")
-            fs.mkdirs(marker.getParent)
-            fs.create(marker, true).close()
+            graft.sinks.Ledger.markApplied(spark, path, id)
           }
         }
       }

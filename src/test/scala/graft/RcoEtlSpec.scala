@@ -331,7 +331,10 @@ class RcoEtlSpec extends GraftSuite {
     import graft.operators.CacheScope
     import spark.implicits._
     spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // compared by id: the map is weak-valued, so the ContextCleaner may
+    // drop an unreferenced earlier RDD while the body runs
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     intercept[RuntimeException] {
       CacheScope.collect {
         val pinned = CacheScope.pin(Seq(1, 2, 3).toDF("x"))
@@ -339,7 +342,7 @@ class RcoEtlSpec extends GraftSuite {
         sys.error("plan construction failed mid-site")
       }
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert((persisted -- before).isEmpty,
       "a throwing body must not leak its pins (fleet loops never get " +
         "the release handle on that path)")
   }

@@ -74,6 +74,67 @@ class SinksSpec extends GraftSuite {
     ParquetSinks.deleteKeys(spark, tmp(), keys, "LINE") // no table: no-op
   }
 
+  test("deleteKeys keeps a pre-marker bucketed table bucketed") {
+    val path = tmp()
+    // the layout the bucketed sinks wrote before the modulus marker
+    // existed: the legacy fixed 64 buckets, no _graft_nbuckets sidecar
+    Seq(("A", "L1", 10.0), ("A", "L1", 90.0), ("B", "L1", 10.0),
+      ("A", "L2", 10.0)).toDF("Server", "LINE", "t")
+      .withColumn(ParquetSinks.BucketCol,
+        pmod(xxhash64(col("LINE")), lit(64)).cast("int"))
+      .write.partitionBy(ParquetSinks.BucketCol).parquet(path)
+    ParquetSinks.deleteKeys(spark, path,
+      Seq(("A", "L1")).toDF("Server", "LINE"), "LINE")
+    // a flattened table would now get its first bucket dir beside the
+    // flat files, and readers would lose every other row
+    ParquetSinks.upsertWindow(spark,
+      Seq(("A", "L3", 10.0)).toDF("Server", "LINE", "t"), path, "LINE", "t",
+      scopeCols = Seq("Server"))
+    assert(rows(path) == Set("B|L1|10.0", "A|L2|10.0", "A|L3|10.0"))
+    assert(new java.io.File(path).list().forall(n =>
+      n.startsWith(ParquetSinks.BucketCol + "=") || n.startsWith("_") ||
+        n.startsWith(".")), "the table must stay bucketed")
+  }
+
+  test("bucketed sinks never rewrite an untouched bucket") {
+    val base = (1 to 16).map(i => (s"L$i", 10.0, "a"))
+    val baseRows = base.map { case (l, t, v) => s"$l|$t|$v" }.toSet
+    val cases: Seq[(String, String => Unit, Set[String])] = Seq(
+      ("upsertWindow", p => ParquetSinks.upsertWindow(spark,
+        Seq(("L1", 50.0, "n")).toDF("LINE", "t", "v"), p, "LINE", "t"),
+        baseRows + "L1|50.0|n"),
+      ("upsertByKeyBucketed", p => ParquetSinks.upsertByKeyBucketed(spark,
+        Seq(("L1", 10.0, "n")).toDF("LINE", "t", "v"), p, Seq("LINE", "t"),
+        "LINE"), baseRows - "L1|10.0|a" + "L1|10.0|n"),
+      ("applyChangesBucketed", p => ParquetSinks.applyChangesBucketed(spark,
+        Seq(("L1", 10.0, "n", "U")).toDF("LINE", "t", "v", "op"), p,
+        Seq("LINE", "t"), Seq("v"), "LINE"),
+        baseRows - "L1|10.0|a" + "L1|10.0|n"),
+      ("deleteKeys", p => ParquetSinks.deleteKeys(spark, p,
+        Seq("L1").toDF("LINE"), "LINE"), baseRows - "L1|10.0|a"))
+    cases.foreach { case (sink, call, expected) =>
+      val path = tmp()
+      ParquetSinks.upsertWindow(spark, base.toDF("LINE", "t", "v"), path,
+        "LINE", "t")
+      val touched = s"${ParquetSinks.BucketCol}=" + spark.read.parquet(path)
+        .filter(col("LINE") === "L1").select(ParquetSinks.BucketCol)
+        .head().getInt(0)
+      def parts: Map[String, Set[String]] = new java.io.File(path)
+        .listFiles().filter(d => d.isDirectory &&
+          d.getName.startsWith(ParquetSinks.BucketCol + "="))
+        .map(d => d.getName -> d.list().filter(_.startsWith("part-")).toSet)
+        .toMap
+      val before = parts
+      assert(before.size > 1, "keys should spread over several buckets")
+      call(path)
+      val after = parts
+      (before - touched).foreach { case (dir, files) =>
+        assert(after.get(dir).contains(files), s"$sink rewrote $dir")
+      }
+      assert(rows(path) == expected, sink)
+    }
+  }
+
   test("replaceDedup keeps only non-superseded stored keys, is idempotent") {
     val path = tmp()
     ParquetSinks.replaceDedup(spark,
