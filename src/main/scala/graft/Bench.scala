@@ -164,9 +164,9 @@ object Bench {
       else SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Release every frame the previous query pinned (pipeline memos +
-    // operator-internal persists, which all register with the
-    // CacheManager): the bench must measure PLANS, not cache residency.
+    // Release every frame the previous query pinned (the gate's RCO
+    // spines + operator-internal persists): the bench must measure
+    // PLANS, not cache residency.
     // With 16 queries sharing one session, accumulated persisted blocks
     // put eviction pressure on whichever query runs mid-bench — r3's
     // rco_gantt read 6.87s in-context vs 1.54s isolated from exactly

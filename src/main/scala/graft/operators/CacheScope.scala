@@ -3,6 +3,8 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Tracked persists. Operators that cache an internal frame (the
@@ -65,14 +67,19 @@ object CacheScope {
     * the CacheManager — and hand the scope a double-release entry for
     * a pin this call did not create.
     *
-    * Must hold: `df` is not built on a [[cut]]. A cut's `LogicalRDD`
-    * leaf keeps raw expression ids in the partitioning of its canonical
-    * form, so once a consumer's self-join re-instances that leaf the
-    * consumer's plan no longer matches the pin, and every consumer
-    * silently recomputes the frame. A frame over a cut that several
-    * consumers read must itself be a cut (BrandcodeResolve's per-CO
-    * frame). */
+    * Throws IllegalArgumentException when `df` is built on a [[cut]].
+    * A cut's `LogicalRDD` leaf keeps raw expression ids in the
+    * partitioning and ordering of its canonical form, so once a
+    * consumer's self-join re-instances that leaf the consumer's plan no
+    * longer matches the pin, and every consumer silently recomputes the
+    * frame. A frame over a cut that several consumers read must itself
+    * be a cut (BrandcodeResolve's per-CO frame). */
   def pin(df: DataFrame): DataFrame = {
+    require(!df.queryExecution.analyzed.exists {
+      case l: LogicalRDD => l.outputOrdering.nonEmpty ||
+        !l.outputPartitioning.isInstanceOf[UnknownPartitioning]
+      case _ => false
+    }, "a pin over a cut stops matching once re-instanced; cut it instead")
     if (df.storageLevel != StorageLevel.NONE) return df
     val c = df.persist(StorageLevel.MEMORY_AND_DISK)
     val buf = active.get()
@@ -163,8 +170,7 @@ object CacheScope {
   def release(df: DataFrame): Unit = {
     df.unpersist()
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
   }

@@ -94,7 +94,7 @@ object FirstStopAfterCo {
   /** First_Stop_after_CO_Data: one row per CO that has an unplanned,
     * non-idle, non-excluded stop in its window.
     * @param assigned optionally a pre-materialized [[assignedStops]]
-    *                 (both outputs share it; see RcoPipeline). */
+    *                 (both outputs share it; see `RcoEtl.Spine`). */
   def firstStops(coAgg: DataFrame, fullLog: DataFrame,
       assigned: Option[DataFrame] = None): DataFrame = {
     val wCo = Window.partitionBy("co_id").orderBy(col("t"), col("dtid"))

@@ -327,22 +327,4 @@ object GanttGenerate {
       .withColumn("DOWNTIME", round(col("DOWNTIME") * 60 / 60, 2))
       .withColumn("UPTIME", round(col("UPTIME") * 60 / 60, 2))
   }
-
-  /** Full Gantt_Data: non-constraint pass (status 2/3) over the machine
-    * log minus single-constraint lines' constraint machines (G3), plus
-    * the constraint pass (status 1/1.7/2.3/4) over the constraint log
-    * with the CO-event flag (J6) — both folded into one tagged pass. */
-  def ganttData(coAgg: DataFrame, machineLog: DataFrame,
-      constraintLog: DataFrame,
-      constraintCounts: Option[DataFrame] = None): DataFrame =
-    ganttDataFromAssigned(
-      assignedTagged(coAgg, machineLog, constraintLog, constraintCounts))
-
-  /** Event_Log_for_Gantt (G4): every stop feeding the Gantt points,
-    * tagged with its CO, non-constraint (minus G3) ∪ constraint. */
-  def eventLog(coAgg: DataFrame, machineLog: DataFrame,
-      constraintLog: DataFrame,
-      constraintCounts: Option[DataFrame] = None): DataFrame =
-    eventLogFromAssigned(
-      assignedTagged(coAgg, machineLog, constraintLog, constraintCounts))
 }

@@ -133,16 +133,14 @@ object PageRank {
     * an InMemoryRelation), so pinning a toy graph at the configured
     * shuffle width makes EVERY round schedule that many tasks per
     * cache scan — pure scheduling overhead that doubled the sf0.1
-    * bench entry. The width is the edge scan's own partition count
-    * capped by `spark.sql.shuffle.partitions`: a 100 TB edge list
-    * pins at full shuffle width, a toy graph at a handful of tasks
-    * per round. */
+    * bench entry. The width is [[CacheScope.pinWidth]] of the edge
+    * scan: a 100 TB edge list pins at full shuffle width, a toy graph
+    * at a handful of tasks per round. */
   private[graft] def pin(edges: DataFrame): Pinned = {
     val filtered = edges
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src"), col("dst"))
-    val width = math.max(1, math.min(filtered.rdd.getNumPartitions,
-      edges.sparkSession.sessionState.conf.numShufflePartitions))
+    val width = CacheScope.pinWidth(filtered)
     val (frames, release) = CacheScope.collect {
       val e0 = filtered.repartition(width, col("src"))
       val outdeg = CacheScope.pin(e0.groupBy(col("src"))

@@ -2,97 +2,30 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 
 import graft.model.Rco
+import graft.pipeline.RcoEtl.{SiteParams, Spine}
 import graft.sources.Tables
 
-/** Shared spine of the RCO pipeline: full deduped downtime log →
-  * CO-filtered sessionization → CO aggregate. Every output table
-  * (brandcode, first-stop, uptime, Gantt, event log) descends from these
-  * three frames, and the reference computes them exactly once per run
-  * (`App/etl/transform/mes_etl.py:23-289`).
-  *
-  * Without sharing, each downstream DataFrame would re-execute the whole
-  * upstream DAG — Spark performs no cross-branch common-subplan reuse, so
-  * e.g. BrandcodeResolve (which consumes coAgg three times and the full
-  * log twice) pays ~5× the spine cost. Persisting the spine is the
-  * single-node stand-in for what a cluster deployment does by
-  * checkpointing the sessionized log to a table between stages.
-  *
-  * MEMORY_AND_DISK: the spine is O(events) — at 100 TB input this wants
-  * a real checkpoint table; at bench scale it's a few MB per executor.
-  */
+/** The gate's RCO spines: one [[Spine]] per (session, sf-dir, site),
+  * each over that dir's canonical log — the frames [[RcoQueries]]' `rco_*`
+  * entries read, built exactly as `RcoEtl.runReleasable` builds a site's.
+  * A spine forces only the frames its entries read. */
 object RcoPipeline {
 
-  private val memo =
-    new ConcurrentHashMap[(SparkSession, String, Sessionize.Params),
-      (DataFrame, DataFrame, DataFrame)]()
+  private val spines =
+    new ConcurrentHashMap[(SparkSession, String, SiteParams), Spine]()
 
-  /** (fullLog, sessionized CO log, coAgg) for the given site params,
-    * computed once per (session, sf-dir, params). */
-  def spine(s: SparkSession, dir: String, p: Sessionize.Params)
-      : (DataFrame, DataFrame, DataFrame) =
-    memo.computeIfAbsent((s, dir, p), { _ =>
-      val full = Rco.downtimeLogDeduped(Tables.events(s, dir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val ses = Sessionize(Rco.coFilter(full, Rco.testCoPredicate), p)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val agg = CoAggregate(ses).persist(StorageLevel.MEMORY_AND_DISK)
-      (full, ses, agg)
-    })
+  def spine(s: SparkSession, dir: String, site: SiteParams): Spine =
+    spines.computeIfAbsent((s, dir, site),
+      _ => new Spine(Rco.downtimeLogDeduped(Tables.events(s, dir)), site))
 
-  def fullLog(s: SparkSession, dir: String, p: Sessionize.Params): DataFrame =
-    spine(s, dir, p)._1
-  def sessionized(s: SparkSession, dir: String, p: Sessionize.Params): DataFrame =
-    spine(s, dir, p)._2
-  def coAgg(s: SparkSession, dir: String, p: Sessionize.Params): DataFrame =
-    spine(s, dir, p)._3
-
-  private val fsMemo =
-    new ConcurrentHashMap[(SparkSession, String, Sessionize.Params),
-      DataFrame]()
-
-  /** First-stop window assignment with cumulative uptime — shared by
-    * the first-stop and uptime-till-next-CO outputs. */
-  def firstStopAssigned(s: SparkSession, dir: String,
-      p: Sessionize.Params): DataFrame =
-    fsMemo.computeIfAbsent((s, dir, p), { _ =>
-      FirstStopAfterCo.assignedStops(coAgg(s, dir, p), fullLog(s, dir, p))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-
-  private val outMemo =
-    new ConcurrentHashMap[(String, SparkSession, String, Sessionize.Params),
-      DataFrame]()
-
-  /** Memoize a named output table per (session, sf-dir, site params):
-    * operators that cache internal frames (brandcode's per-CO
-    * checkpoint) would otherwise cache a NEW set of blocks on every
-    * invocation of the same query — e.g. Bench's warmup
-    * + 2 timed runs tripled the Gantt cache footprint. One output table
-    * per run is also the reference's semantics. Params are part of the
-    * key (mirroring spine/fsMemo) so two sites sharing a session never
-    * alias each other's outputs. */
-  def memoized(name: String, s: SparkSession, dir: String,
-      p: Sessionize.Params)(build: => DataFrame): DataFrame =
-    outMemo.computeIfAbsent((name, s, dir, p), _ => build)
-
-  /** Release every cached frame this session pinned (memoized spines
-    * and assigned streams). Long-lived sessions that run many sf-dirs
-    * or parameter sets should call this between batches — persisted
-    * blocks otherwise accumulate until eviction pressure. */
-  def clear(s: SparkSession): Unit = {
-    memo.forEach { (k, v) =>
-      if (k._1 eq s) {
-        Seq(v._1, v._2, v._3).foreach(_.unpersist())
-        memo.remove(k)
-      }
+  /** Release every spine this session built. Long-lived sessions that
+    * run many sf-dirs or parameter sets should call this between
+    * batches; the bench calls it before every rep. */
+  def clear(s: SparkSession): Unit =
+    spines.forEach { (k, v) =>
+      if (k._1 eq s) { v.release(); spines.remove(k) }
     }
-    fsMemo.forEach { (k, v) =>
-      if (k._1 eq s) { v.unpersist(); fsMemo.remove(k) }
-    }
-    outMemo.forEach { (k, _) => if (k._2 eq s) outMemo.remove(k) }
-  }
 }

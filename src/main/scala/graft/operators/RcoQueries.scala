@@ -4,47 +4,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Rco, RcoSql}
+import graft.pipeline.RcoEtl
+import graft.pipeline.RcoEtl.SiteParams
 import graft.sources.Tables
 
 /** RCO analytical-core queries + their DuckDB oracles, wired over the
   * driver's `events` table via the [[graft.model.Rco]] adapter. Each query
   * name maps 1:1 to a SURVEY §2 operator cluster; the oracle SQL is built
-  * from the paired *Sql twins so Spark/DuckDB stay in lockstep.
+  * from the paired *Sql twins so Spark/DuckDB stay in lockstep. Every
+  * spine frame comes from a site's [[RcoEtl.Spine]] ([[RcoPipeline]]),
+  * so the gate checks the frames `RcoEtl.run` ships.
   */
 object RcoQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Site parameter used by every test query (CO_Trigger_Parameter=120
-    * min picked so sf0.01 yields ~15% merged events, overlap-negative
-    * gaps included — see TESTDATA stats in the round notes). */
-  val P = Sessionize.Params(triggerParam = 120.0)
-  val Psplit = Sessionize.Params(triggerParam = 120.0, splitOnCause = true,
-    changeoverFailureNoSplit = true)
+  /** The site every test query runs (the fleet's first). */
+  private val Site: SiteParams = RcoEtl.fleetSiteParams.head
+  private val SiteSplit =
+    Site.copy(splitOnCause = true, changeoverFailureNoSplit = true)
   /** The Python port's disjunct-4 factor (SURVEY §7.4a compat). */
-  val Ppy = Sessionize.Params(triggerParam = 120.0, pythonFactor4 = true)
+  private val SitePy = Site.copy(pythonFactor4 = true)
+  private val P = Site.sessionize
+
+  private def spine(s: SparkSession, dir: String,
+      site: SiteParams = Site): RcoEtl.Spine =
+    RcoPipeline.spine(s, dir, site)
 
   private val sesCols = Seq("CO_Identifier", "LINE", "downtime_id",
     "START_TIME", "DOWNTIME", "UPTIME", "BRANDCODE", "CO_Trigger_Column",
     "CO_Trigger", "MinutesDifference")
 
-  def sessionize(params: Sessionize.Params): Q = (s, dir) => {
-    val ses = if (params == P) RcoPipeline.sessionized(s, dir, P)
-      else Sessionize(
-        Rco.coFilter(RcoPipeline.fullLog(s, dir, P), Rco.testCoPredicate),
-        params)
-    ses.select(sesCols.map(col): _*)
-  }
+  def sessionize(site: SiteParams): Q = (s, dir) =>
+    spine(s, dir, site).sessionized.select(sesCols.map(col): _*)
 
-  private def sessionizeOracle(params: Sessionize.Params): String =
+  private def sessionizeOracle(site: SiteParams): String =
     s"""${RcoSql.dtCte},
-    ${SessionizeSql.sesCte(RcoSql.coPredicate, params)}
+    ${SessionizeSql.sesCte(RcoSql.coPredicate, site.sessionize)}
     SELECT CO_Identifier, LINE, downtime_id, START_TIME, DOWNTIME, UPTIME,
            BRANDCODE, CO_Trigger_Column, CO_Trigger,
            gap AS MinutesDifference
     FROM ses"""
 
-  def coAgg: Q = (s, dir) => RcoPipeline.coAgg(s, dir, P)
+  def coAgg: Q = (s, dir) => spine(s, dir).coAgg
 
   private val coAggOracle: String =
     s"""${RcoSql.dtCte},
@@ -56,11 +58,7 @@ object RcoQueries {
            Number_of_Machines, CO_DOWNTIME_prorated
     FROM agg"""
 
-  def brandcode: Q = (s, dir) =>
-    RcoPipeline.memoized("brandcode", s, dir, P) {
-      BrandcodeResolve(RcoPipeline.coAgg(s, dir, P),
-        RcoPipeline.fullLog(s, dir, P))
-    }
+  def brandcode: Q = (s, dir) => spine(s, dir).brandcode
 
   private val brandcodeOracle: String =
     s"""${RcoSql.dtCte},
@@ -73,15 +71,16 @@ object RcoQueries {
                 ELSE 'OK' END AS Brandcode_Status
     FROM bc"""
 
-  def firstStop: Q = (s, dir) =>
-    FirstStopAfterCo.firstStops(RcoPipeline.coAgg(s, dir, P),
-      RcoPipeline.fullLog(s, dir, P),
-      Some(RcoPipeline.firstStopAssigned(s, dir, P)))
+  def firstStop: Q = (s, dir) => {
+    val sp = spine(s, dir)
+    FirstStopAfterCo.firstStops(sp.coAgg, sp.fullLog, Some(sp.assignedStops))
+  }
 
-  def coUptime: Q = (s, dir) =>
-    FirstStopAfterCo.uptimeTillNextCo(RcoPipeline.coAgg(s, dir, P),
-      RcoPipeline.fullLog(s, dir, P),
-      Some(RcoPipeline.firstStopAssigned(s, dir, P)))
+  def coUptime: Q = (s, dir) => {
+    val sp = spine(s, dir)
+    FirstStopAfterCo.uptimeTillNextCo(sp.coAgg, sp.fullLog,
+      Some(sp.assignedStops))
+  }
 
   private def rcoWith(tail: String): String =
     s"""${RcoSql.dtCte},
@@ -114,14 +113,14 @@ object RcoQueries {
     SELECT ${prodCols.mkString(", ")} FROM prodin"""
 
   def runtimePerDay: Q = (s, dir) =>
-    ProdOps.runtimePerDay(RcoPipeline.fullLog(s, dir, P))
+    ProdOps.runtimePerDay(spine(s, dir).fullLog)
 
   private val runtimeOracle: String =
     s"""${RcoSql.dtCte}
     ${ProdOpsSql.runtimePerDaySql}"""
 
   def dayStart: Q = (s, dir) =>
-    ProdOps.dayStart(RcoPipeline.fullLog(s, dir, P))
+    ProdOps.dayStart(spine(s, dir).fullLog)
 
   private val dayStartOracle: String =
     s"""${RcoSql.dtCte},
@@ -137,20 +136,11 @@ object RcoQueries {
            StatFactor, tally
     FROM bm"""
 
-  private def consLog(s: SparkSession, dir: String): DataFrame =
-    GanttGenerate.constraintLog(RcoPipeline.fullLog(s, dir, P),
-      RcoPipeline.sessionized(s, dir, P), Seq("M0"))
-
-  def gantt: Q = (s, dir) => RcoPipeline.memoized("gantt", s, dir, P) {
-    GanttGenerate.ganttData(RcoPipeline.coAgg(s, dir, P),
-      RcoPipeline.fullLog(s, dir, P), consLog(s, dir))
-  }
+  def gantt: Q = (s, dir) =>
+    GanttGenerate.ganttDataFromAssigned(spine(s, dir).ganttAssigned)
 
   def ganttEvents: Q = (s, dir) =>
-    RcoPipeline.memoized("gantt_events", s, dir, P) {
-      GanttGenerate.eventLog(RcoPipeline.coAgg(s, dir, P),
-        RcoPipeline.fullLog(s, dir, P), consLog(s, dir))
-    }
+    GanttGenerate.eventLogFromAssigned(spine(s, dir).ganttAssigned)
 
   private val ganttOracle: String = rcoWith(
     s"""${GanttGenerateSql.ganttSql}
@@ -167,7 +157,7 @@ object RcoQueries {
     * conditional counts in a single aggregate, unpivoted with `stack`
     * (the 24-branch union ran 24 full-log scans). */
   def sitePredicates: Q = (s, dir) => {
-    val dt = RcoPipeline.fullLog(s, dir, P)
+    val dt = spine(s, dir).fullLog
     val sites = SitePredicates.catalog.toSeq.sortBy(_._1)
     val aggCols = sites.zipWithIndex.map { case ((_, pred), i) =>
       count(when(expr(pred), lit(1))).as(s"c$i")
@@ -189,50 +179,33 @@ object RcoQueries {
     $selects"""
   }
 
-  /** Fleet configuration under the oracle gate: three sites with
-    * DIFFERENTIATED SiteParams — different CO-predicate catalog
-    * entries, trigger parameters and split toggles — the heterogeneity
-    * `RcoEtl.runSites` iterates over (`App/rco_main.py:95-106` reads
-    * these per site from Site_Config). */
-  val fleetSites: Seq[(String, String, Sessionize.Params)] = Seq(
-    ("SiteA", Rco.testCoPredicate, P),
-    ("SiteB", SitePredicates.catalog("StLouis Proficy"),
-      Sessionize.Params(triggerParam = 60.0, splitOnCause = true,
-        changeoverFailureNoSplit = true)),
-    ("SiteC", SitePredicates.catalog("Cabuyao"),
-      Sessionize.Params(triggerParam = 240.0, pythonFactor4 = true)))
-
-  /** Per-site spines computed with each site's OWN params over the same
+  /** Each fleet site's CO aggregate, from its own spine over the same
     * canonical log, unioned with the Server tag — what a fleet run
-    * writes, minus the sinks. One full-log scan feeds all three plans
-    * (shared memoized frame); each site's sessionize/aggregate shuffles
-    * only its own filtered slice. */
-  def multisite: Q = (s, dir) => {
-    val full = RcoPipeline.fullLog(s, dir, P)
-    fleetSites.map { case (server, pred, params) =>
-      CoAggregate(Sessionize(Rco.coFilter(full, pred), params))
-        .withColumn("Server", lit(server))
+    * writes, minus the sinks. The spines share one pinned log; each
+    * site's sessionize/aggregate shuffles only its own filtered slice. */
+  def multisite: Q = (s, dir) =>
+    RcoEtl.fleetSiteParams.map { site =>
+      spine(s, dir, site).coAgg.withColumn("Server", lit(site.server))
     }.reduce(_.unionByName(_))
-  }
 
   private val multisiteOracle: String =
     // each site's CTE chain in a parenthesized query expression (DuckDB
     // rejects WITH directly inside a FROM subquery)
-    fleetSites.map { case (server, pred, params) =>
+    RcoEtl.fleetSiteParams.map { site =>
       s"""(${RcoSql.dtCte},
-           ${SessionizeSql.sesCte(pred, params)},
+           ${SessionizeSql.sesCte(site.coPredicateSql, site.sessionize)},
            ${CoAggregateSql.aggCte}
          SELECT CO_Identifier, LINE, CO_StartTime, CO_Start_EPOCH,
              CO_End_EPOCH, CO_DOWNTIME, downtime_id_of_First_CO_Event,
              downtime_id_of_Last_CO_Event, n_events, first_ev_UPTIME,
              Number_of_Machines, CO_DOWNTIME_prorated,
-             '$server' AS Server
+             '${site.server}' AS Server
          FROM agg)"""
     }.mkString(" UNION ALL ")
 
   def constraintFilter: Q = (s, dir) =>
     SitePredicates
-      .constraintFilter(RcoPipeline.fullLog(s, dir, P), Seq("M0", "M2"))
+      .constraintFilter(spine(s, dir).fullLog, Seq("M0", "M2"))
       .select(col("downtime_id"), col("LINE"), col("MACHINE"))
 
   private val constraintFilterOracle: String =
@@ -244,9 +217,10 @@ object RcoQueries {
     * events restricted to COs surviving aggregation (J8 left-semi — a
     * no-op by construction here but kept as the reference's consistency
     * contract), comment CR/LF scrub, null-line drop. */
-  def coEventLog: Q = (s, dir) =>
-    RcoPipeline.sessionized(s, dir, P)
-      .join(RcoPipeline.coAgg(s, dir, P).select(col("CO_Identifier")),
+  def coEventLog: Q = (s, dir) => {
+    val sp = spine(s, dir)
+    sp.sessionized
+      .join(sp.coAgg.select(col("CO_Identifier")),
         Seq("CO_Identifier"), "left_semi")
       .filter(col("LINE").isNotNull)
       .select(col("CO_Identifier"), col("LINE"),
@@ -260,6 +234,7 @@ object RcoQueries {
         col("Reason1Category"), col("Reason2Category"),
         col("Reason3Category"), col("Reason4Category"),
         col("ProdDesc"), col("ProcessOrder"))
+  }
 
   private val coEventLogOracle: String = rcoWith(
     """evlog AS (
@@ -282,9 +257,9 @@ object RcoQueries {
     "rco_constraint_filter" -> constraintFilter,
     "rco_gantt" -> gantt,
     "rco_gantt_events" -> ganttEvents,
-    "rco_sessionize" -> sessionize(P),
-    "rco_sessionize_split" -> sessionize(Psplit),
-    "rco_sessionize_pyfork" -> sessionize(Ppy),
+    "rco_sessionize" -> sessionize(Site),
+    "rco_sessionize_split" -> sessionize(SiteSplit),
+    "rco_sessionize_pyfork" -> sessionize(SitePy),
     "rco_co_agg" -> coAgg,
     "rco_multisite" -> multisite,
     "rco_brandcode" -> brandcode,
@@ -301,9 +276,9 @@ object RcoQueries {
     "rco_constraint_filter" -> constraintFilterOracle,
     "rco_gantt" -> ganttOracle,
     "rco_gantt_events" -> ganttEventsOracle,
-    "rco_sessionize" -> sessionizeOracle(P),
-    "rco_sessionize_split" -> sessionizeOracle(Psplit),
-    "rco_sessionize_pyfork" -> sessionizeOracle(Ppy),
+    "rco_sessionize" -> sessionizeOracle(Site),
+    "rco_sessionize_split" -> sessionizeOracle(SiteSplit),
+    "rco_sessionize_pyfork" -> sessionizeOracle(SitePy),
     "rco_co_agg" -> coAggOracle,
     "rco_multisite" -> multisiteOracle,
     "rco_brandcode" -> brandcodeOracle,

@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint,
   SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.model.Rco
 import graft.operators._
 import graft.sinks.ParquetSinks
 
@@ -37,7 +40,61 @@ object RcoEtl {
       machineLevel: Boolean = true,
       firstStop: Boolean = true,
       multiConstraint: Boolean = false,
-      constraintMachineSuffixes: Seq[String] = Seq("M0"))
+      constraintMachineSuffixes: Seq[String] = Seq("M0")) {
+    def sessionize: Sessionize.Params = Sessionize.Params(triggerParam,
+      splitOnCause, changeoverFailureNoSplit, pythonFactor4)
+  }
+
+  /** One site's RCO spine: the frames every output table descends from,
+    * computed once per site run as the reference does
+    * (`App/etl/transform/mes_etl.py:23-289`). [[runReleasable]] and the
+    * gate's `rco_*` entries ([[graft.operators.RcoPipeline]]) read them.
+    * Each frame is lazy and, once forced, an eager [[CacheScope.cut]], so
+    * a consumer forces only what it reads and plans over checkpoint
+    * leaves. Each is taken in a scope of its own: [[release]] frees all
+    * the spine made, the log's pin (when the spine took it) and
+    * BrandcodeResolve's per-CO cut included. */
+  final class Spine(fullLog0: DataFrame, val site: SiteParams,
+      constraintCounts: Option[DataFrame] = None) {
+    private val releases = ArrayBuffer.empty[() => Unit]
+    private def owned[T](body: => T): T = {
+      val (t, release) = CacheScope.collect(body)
+      releases.synchronized { releases += release }
+      t
+    }
+
+    /** The canonical log. It alone stays a pin, not a cut: a fleet
+      * shares one persisted log across its sites, and pin leaves a
+      * caller-persisted frame, unregistered, to its owner, where a cut
+      * would copy the whole log per site. It is materialized before any
+      * consumer's plan compiles: under AQE a plan compiled against an
+      * unbuilt cache sees UnknownPartitioning, so it would re-exchange
+      * and re-sort the full log instead of reusing its (LINE) clustering
+      * and (LINE, START_EPOCH, dtid) order. */
+    lazy val fullLog: DataFrame = owned {
+      val fresh = fullLog0.storageLevel == StorageLevel.NONE
+      val pinned = CacheScope.pin(fullLog0)
+      if (fresh) pinned.count()
+      pinned
+    }
+    lazy val sessionized: DataFrame = owned(CacheScope.cut(Sessionize(
+      Rco.coFilter(fullLog, site.coPredicateSql), site.sessionize)))
+    lazy val coAgg: DataFrame = owned(CacheScope.cut(CoAggregate(sessionized)))
+    /** Shared by uptime-till-next-CO and first-stop. */
+    lazy val assignedStops: DataFrame = owned(CacheScope.cut(
+      FirstStopAfterCo.assignedStops(coAgg, fullLog)))
+    /** Brandcode per CO; building it takes BrandcodeResolve's per-CO
+      * cut. */
+    lazy val brandcode: DataFrame = owned(BrandcodeResolve(coAgg, fullLog))
+    /** ONE window-assignment join feeds both Gantt tables (it is the
+      * Gantt chain's expensive stage). */
+    lazy val ganttAssigned: DataFrame = owned(CacheScope.cut(
+      GanttGenerate.assignedTagged(coAgg, fullLog,
+        GanttGenerate.constraintLog(fullLog, sessionized,
+          site.constraintMachineSuffixes), constraintCounts)))
+
+    def release(): Unit = releases.synchronized { releases.foreach(_()) }
+  }
 
   /** All output tables, keyed by their reference names.
     * @param constraintCounts optional (LINE, Number_of_Constraints) —
@@ -48,43 +105,33 @@ object RcoEtl {
     runReleasable(fullLog0, prodLog, p, constraintCounts)._1
 
   /** [[run]] plus a release handle that frees every frame this site
-    * materialized for reuse, captured via [[CacheScope]]: the canonical
-    * log's pin and the spine's eager [[CacheScope.cut]]s (so this call
-    * runs the spine, and each output plans over checkpoint leaves, not a
-    * tower of nested cached plans). A single-site caller may ignore it:
-    * the pin then lives until the cache is cleared, the checkpoints
-    * until the outputs are garbage-collected and Spark's ContextCleaner
-    * reclaims them. A site LOOP must call it per site, or dead blocks
-    * pile up and eviction lands on whichever site runs last;
-    * [[runSites]] does. */
+    * materialized for reuse: the site's [[Spine]] (so this call runs the
+    * spine, and each output plans over its checkpoint leaves) and the
+    * `CO_Aggregated_Data` cut. If building the outputs throws, both are
+    * freed before the rethrow. A single-site caller may ignore the
+    * handle: the canonical log's pin then lives until the cache is
+    * cleared, the checkpoints until the outputs are garbage-collected
+    * and Spark's ContextCleaner reclaims them. A site LOOP must call it
+    * per site, or dead blocks pile up and eviction lands on whichever
+    * site runs last; [[runSites]] does. */
   def runReleasable(fullLog0: DataFrame, prodLog: DataFrame, p: SiteParams,
       constraintCounts: Option[DataFrame] = None)
-      : (Map[String, DataFrame], () => Unit) = CacheScope.collect {
-    import CacheScope.cut
-    // Every output re-reads the canonical log (the Gantt passes four
-    // times); the reference computes it once per site run
-    // (`App/etl/overall_etl.py:52-80`). It alone stays a pin, not a
-    // cut: a fleet shares one persisted log across its sites, and pin
-    // leaves a caller-persisted frame, unregistered, to its owner, where
-    // a cut would copy the whole log per site. It is materialized before
-    // any consumer's plan compiles: under AQE a plan compiled against an
-    // unbuilt cache sees UnknownPartitioning, so it would re-exchange and
-    // re-sort the full log instead of reusing its (LINE) clustering and
-    // (LINE, START_EPOCH, dtid) order.
-    val owned = fullLog0.storageLevel == StorageLevel.NONE
-    val fullLog = CacheScope.pin(fullLog0)
-    if (owned) fullLog.count()
-    val sesParams = Sessionize.Params(p.triggerParam, p.splitOnCause,
-      p.changeoverFailureNoSplit, p.pythonFactor4)
-    val coLog = graft.model.Rco.coFilter(fullLog, p.coPredicateSql)
-    val ses = cut(Sessionize(coLog, sesParams))
-    val agg = cut(CoAggregate(ses))
-    // shared by uptime-till-next-CO and first-stop (computed once)
-    val assigned = cut(FirstStopAfterCo.assignedStops(agg, fullLog))
+      : (Map[String, DataFrame], () => Unit) = {
+    val spine = new Spine(fullLog0, p, constraintCounts)
+    val (outputs, release) =
+      try CacheScope.collect(outputsOf(spine, prodLog))
+      catch { case e: Throwable => spine.release(); throw e }
+    (outputs, () => { release(); spine.release() })
+  }
 
-    val bc = BrandcodeResolve(agg, fullLog)
+  private def outputsOf(spine: Spine, prodLog: DataFrame)
+      : Map[String, DataFrame] = {
+    import spine.{fullLog, sessionized => ses, coAgg => agg, site => p}
+    // forced in pipeline order: the log, then each spine frame
+    val assigned = spine.assignedStops
+    val bc = spine.brandcode
     // cut: consumed twice by load (table write + Script_Data aggregate)
-    val coAggregated = cut(agg
+    val coAggregated = CacheScope.cut(agg
       // MultiConstraint sites report the prorated downtime
       // (`App/etl/transform/mes_etl.py:225-230` divides in place)
       .withColumn("CO_DOWNTIME",
@@ -124,32 +171,28 @@ object RcoEtl {
           .withColumn("Server", lit(p.server)))
 
     if (!p.machineLevel) withFs
-    else {
-      val consLog = GanttGenerate.constraintLog(fullLog, ses,
-        p.constraintMachineSuffixes)
-      // ONE window-assignment join feeds both Gantt tables (it is the
-      // Gantt chain's expensive stage); cut so the point kernel and
-      // the G4 event log don't re-run it
-      val gAssigned = cut(GanttGenerate.assignedTagged(agg, fullLog,
-        consLog, constraintCounts))
-      withFs +
-        ("Gantt_Data" -> GanttGenerate.ganttDataFromAssigned(gAssigned)
-          .withColumn("Server", lit(p.server))) +
-        ("Event_Log_for_Gantt" -> GanttGenerate
-          .eventLogFromAssigned(gAssigned)
-          .withColumn("Server", lit(p.server)))
-    }
+    else withFs +
+      ("Gantt_Data" -> GanttGenerate.ganttDataFromAssigned(spine.ganttAssigned)
+        .withColumn("Server", lit(p.server))) +
+      ("Event_Log_for_Gantt" -> GanttGenerate
+        .eventLogFromAssigned(spine.ganttAssigned)
+        .withColumn("Server", lit(p.server)))
   }
 
-  /** The 3-site heterogeneous fleet configuration
-    * ([[graft.operators.RcoQueries.fleetSites]]) as full [[SiteParams]]
-    * — what the `rco_fleet_e2e` bench entry drives through
-    * [[runSites]]. */
-  def fleetSiteParams: Seq[SiteParams] =
-    RcoQueries.fleetSites.map { case (server, pred, sp) =>
-      SiteParams(server, pred, sp.triggerParam, sp.splitOnCause,
-        sp.changeoverFailureNoSplit, sp.pythonFactor4)
-    }
+  /** The 3-site heterogeneous fleet under the oracle gate — what the
+    * `rco_fleet_e2e` bench entry drives through [[runSites]] and what
+    * `rco_multisite` checks: different CO-predicate catalog entries,
+    * trigger parameters and split toggles (`App/rco_main.py:95-106`
+    * reads these per site from Site_Config). SiteA is the gate's own
+    * site: CO_Trigger_Parameter=120 min, picked so sf0.01 yields ~15%
+    * merged events, overlap-negative gaps included. */
+  val fleetSiteParams: Seq[SiteParams] = Seq(
+    SiteParams("SiteA", Rco.testCoPredicate),
+    SiteParams("SiteB", SitePredicates.catalog("StLouis Proficy"),
+      triggerParam = 60.0, splitOnCause = true,
+      changeoverFailureNoSplit = true),
+    SiteParams("SiteC", SitePredicates.catalog("Cabuyao"),
+      triggerParam = 240.0, pythonFactor4 = true))
 
   /** Entry-point-1 semantics (`App/rco_main.py:90-118`,
     * `ref/RCO_Overall_orchestrator.R`): iterate the site-config rows,

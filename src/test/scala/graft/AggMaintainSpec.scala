@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class AggMaintainSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-aggm").resolve("state").toString
+    tempDir("graft-aggm").resolve("state").toString
 
   private def batch(rows: (String, Double)*): DataFrame =
     rows.toSeq.toDF("k", "v")

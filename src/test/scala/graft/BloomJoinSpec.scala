@@ -29,8 +29,7 @@ class BloomJoinSpec extends GraftSuite {
     // parquet-backed input: over a LocalRelation the optimizer
     // constant-folds the whole filter away (ConvertToLocalRelation
     // executes it at plan time), which would hide the probe
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bloom_plan").toString
+    val dir = tempDir("graft_bloom_plan").toString
     fact.write.mode("overwrite").parquet(dir)
     val bigScan = spark.read.parquet(dir)
     val plan = BloomJoin.inner(bigScan, dim, "f_key", "d_key")

@@ -67,6 +67,21 @@ class CacheScopeSpec extends GraftSuite {
     frames.foreach(CacheScope.release)
   }
 
+  test("pin rejects a frame built on a cut, before persisting it") {
+    import org.apache.spark.sql.functions.col
+    val c = CacheScope.cut(Seq(3, 1, 2).toDF("v")
+      .repartition(2, col("v")).sortWithinPartitions("v"))
+    try {
+      val leaf = c.queryExecution.analyzed
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+      assert(leaf.outputOrdering.nonEmpty, "the cut keeps its ordering")
+      val over = c.filter(col("v") > 1)
+      val e = intercept[IllegalArgumentException](CacheScope.pin(over))
+      assert(e.getMessage.contains("cut it instead"), e.getMessage)
+      assert(over.storageLevel == StorageLevel.NONE)
+    } finally CacheScope.release(c)
+  }
+
   test("release frees root-checkpoint blocks deterministically — " +
       "Dataset.unpersist alone is a measured no-op on them") {
     val df = Seq(1, 2, 3).toDF("v").localCheckpoint(true)

@@ -34,8 +34,7 @@ class ConfigOpsSpec extends GraftSuite {
   }
 
   test("stored watermark: None before the first load, per-server after") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-wm").toString
+    val base = tempDir("graft-wm").toString
     // first-ever run: no Script_Data table yet → full extract
     assert(ConfigOps.scriptDataWatermark(spark, base, "S1").isEmpty)
     assert(ConfigOps.analysisWindowFromStore(spark, base, "S1",
@@ -58,8 +57,7 @@ class ConfigOpsSpec extends GraftSuite {
     // an upgraded deployment's first run sees the OLD table (no
     // Data_Update_Time column): must fall back to a full extract, not
     // crash on the aggregate
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-wm-old").toString
+    val base = tempDir("graft-wm-old").toString
     Seq(("S1", "L1")).toDF("Server", "LINE")
       .write.parquet(s"$base/Script_Data")
     assert(ConfigOps.scriptDataWatermark(spark, base, "S1").isEmpty)

@@ -11,8 +11,7 @@ import graft.operators.{EntityResolution, ErIngest}
 class ErIngestSpec extends GraftSuite {
   import spark.implicits._
 
-  private def dir() = java.nio.file.Files
-    .createTempDirectory("graft_er_ingest").toString
+  private def dir() = tempDir("graft_er_ingest").toString
 
   private def batchResolve(rows: Seq[(Long, String)])
       : Set[(Long, Long, String)] =

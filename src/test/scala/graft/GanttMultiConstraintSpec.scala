@@ -26,8 +26,8 @@ class GanttMultiConstraintSpec extends GraftSuite {
     val consLog = log.filter(col("MACHINE").endsWith(" M0"))
       .withColumn("CO_Event",
         when(col("downtime_id").isin("1", "2"), 1).otherwise(0))
-    GanttGenerate.ganttData(coAgg, log, consLog,
-      counts.map(_.toDF("LINE", "Number_of_Constraints")))
+    GanttGenerate.ganttDataFromAssigned(GanttGenerate.assignedTagged(
+      coAgg, log, consLog, counts.map(_.toDF("LINE", "Number_of_Constraints"))))
   }
 
   test("single-constraint lines get constraint statuses") {

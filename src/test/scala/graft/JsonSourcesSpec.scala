@@ -7,7 +7,7 @@ import graft.sources.JsonSources
 class JsonSourcesSpec extends GraftSuite {
 
   private def readJson(lines: String*): org.apache.spark.sql.DataFrame = {
-    val dir = Files.createTempDirectory("graft-json")
+    val dir = tempDir("graft-json")
     Files.writeString(dir.resolve("data.json"), lines.mkString("\n"))
     spark.read.json(dir.toString)
   }

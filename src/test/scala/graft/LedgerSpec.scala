@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.sinks.Ledger
 
@@ -24,7 +23,7 @@ class LedgerSpec extends GraftSuite {
 
   test("keeps the newest K per namespace, leaves other namespaces " +
       "and unparseable names alone") {
-    val path = Files.createTempDirectory("ledger").toString
+    val path = tempDir("ledger").toString
     mk(path, (0 to 9).map(i => s"epoch_$i") ++
       (0 to 2).map(i => s"runabc_$i") ++ Seq("MANIFEST"))
     val deleted = Ledger.prune(spark, path, keep = 3)
@@ -35,13 +34,13 @@ class LedgerSpec extends GraftSuite {
 
   test("missing ledger dir is a zero no-op; replay after prune is " +
       "still absorbed for retained epochs") {
-    val path = Files.createTempDirectory("ledger2").toString
+    val path = tempDir("ledger2").toString
     assert(Ledger.prune(spark, path) == 0L)
   }
 
   test("namespace sweep drops dead runs entirely, keeps the newest " +
       "namespaces and suffix-less markers") {
-    val path = Files.createTempDirectory("ledger3").toString
+    val path = tempDir("ledger3").toString
     mk(path, Seq("runaaa_0", "runaaa_1", "runbbb_0", "epoch_0",
       "epoch_1", "MANIFEST"))
     val dir = new org.apache.hadoop.fs.Path(path, "_applied")

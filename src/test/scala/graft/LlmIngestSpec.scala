@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 
@@ -22,7 +21,7 @@ class LlmIngestSpec extends GraftSuite {
     rows.toDF("doc_id", "text")
 
   private def freshIndex(): String =
-    Files.createTempDirectory("ingest_idx").resolve("index").toString
+    tempDir("ingest_idx").resolve("index").toString
 
   test("first batch creates the index and accepts everything distinct") {
     val idx = freshIndex()

@@ -13,7 +13,7 @@ import graft.hadoop.{NioLocalFileSystem, NioRawLocalFileSystem}
 /** The exec-free local FS must be behaviorally identical to the stock
   * one — every assertion compares it against a stock
   * [[RawLocalFileSystem]] over the same files. */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+class NioLocalFileSystemSpec extends AnyFunSuite with TempDirs {
 
   private def fresh(): (NioRawLocalFileSystem, RawLocalFileSystem, java.io.File) = {
     val conf = new Configuration()
@@ -21,7 +21,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     nio.initialize(java.net.URI.create("file:///"), conf)
     val stock = new RawLocalFileSystem
     stock.initialize(java.net.URI.create("file:///"), conf)
-    val dir = Files.createTempDirectory("niofs").toFile
+    val dir = tempDir("niofs").toFile
     (nio, stock, dir)
   }
 
@@ -98,7 +98,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val conf = new Configuration()
     val fs = new NioLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), conf)
-    val dir = Files.createTempDirectory("niofs").toFile
+    val dir = tempDir("niofs").toFile
     val p = new Path(new java.io.File(dir, "cs.bin").getAbsolutePath)
     val out = fs.create(p)
     out.write("payload".getBytes(StandardCharsets.UTF_8)); out.close()

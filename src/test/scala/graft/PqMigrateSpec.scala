@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -29,7 +28,7 @@ class PqMigrateSpec extends GraftSuite {
       transform(col("embedding"), x => x + lit(0.6f)).as("embedding"))
 
   private def freshPath(): String =
-    Files.createTempDirectory("pq_migrate").resolve("pq").toString
+    tempDir("pq_migrate").resolve("pq").toString
 
   private def fs(path: String) =
     new org.apache.hadoop.fs.Path(path)

@@ -48,8 +48,7 @@ class QualityChecksSpec extends GraftSuite {
   }
 
   test("audit is one fused aggregate: single scan of the input") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_qc_plan").toString
+    val dir = tempDir("graft_qc_plan").toString
     fixture.write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     val plan = QualityChecks.audit(scan, "t", Seq(

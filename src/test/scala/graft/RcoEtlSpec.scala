@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.model.Rco
 import graft.pipeline.RcoEtl
@@ -33,7 +32,7 @@ class RcoEtlSpec extends GraftSuite {
   test("runSites isolates per-site failures and records the run log") {
     val full = Rco.downtimeLogDeduped(Tables.events(spark, dir))
     val prod = Rco.productionLog(Tables.events(spark, dir))
-    val base = Files.createTempDirectory("graft-fleet").toString
+    val base = tempDir("graft-fleet").toString
     val log = RcoEtl.runSites(spark, Seq(
       RcoEtl.SiteParams("GoodSite", Rco.testCoPredicate,
         machineLevel = false, firstStop = false),
@@ -55,7 +54,7 @@ class RcoEtlSpec extends GraftSuite {
     // wins.
     val full = Rco.downtimeLogDeduped(Tables.events(spark, dir))
     val prod = Rco.productionLog(Tables.events(spark, dir))
-    val base = Files.createTempDirectory("graft-fleet-scope").toString
+    val base = tempDir("graft-fleet-scope").toString
     val sites = RcoEtl.fleetSiteParams
     val log = RcoEtl.runSites(spark, sites, full, prod, base)
     assert(log.values.forall(_ == "Success"), log)
@@ -133,7 +132,7 @@ class RcoEtlSpec extends GraftSuite {
     val prod = Rco.productionLog(Tables.events(spark, dir))
     val out = RcoEtl.run(full, prod,
       RcoEtl.SiteParams("TestSite", Rco.testCoPredicate))
-    val base = Files.createTempDirectory("graft-etl").toString
+    val base = tempDir("graft-etl").toString
     RcoEtl.load(spark, out, base, "TestSite")
     def counts = Seq("CO_Aggregated_Data", "Script_Data",
       "BRANDCODE_data", "Runtime_per_Day_data", "CO_Event_Log",
@@ -148,7 +147,7 @@ class RcoEtlSpec extends GraftSuite {
   test("load migrates a pre-parity Script_Data table before the merge") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("graft-sd-mig").toString
+    val base = tempDir("graft-sd-mig").toString
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 06:00:00")
     // the layout every load wrote before the schema-parity change:
     // keyed on LINE, no System / BU / Data_Update_Time
@@ -187,7 +186,7 @@ class RcoEtlSpec extends GraftSuite {
       .toDF("Server", "Date", "LINE", "Runtime")
       .repartition(1).withColumn("Runtime", slow(col("Runtime")))
     val bad = Seq(1).toDF("x") // no LINE column → upsertWindow fails fast
-    val base = Files.createTempDirectory("graft-await").toString
+    val base = tempDir("graft-await").toString
     intercept[Exception] {
       RcoEtl.load(spark, Map(
         "Runtime_per_Day_data" -> runtime, "CO_Event_Log" -> bad),
@@ -220,7 +219,7 @@ class RcoEtlSpec extends GraftSuite {
     // load cuts each table's frame for its probe+write pair and must
     // free those itself; release then frees the spine
     RcoEtl.load(spark, out,
-      Files.createTempDirectory("graft-release").toString, "TestSite")
+      tempDir("graft-release").toString, "TestSite")
     release()
     assert((persisted -- before).isEmpty,
       "release must unpersist everything run pinned (fleet runs loop " +
@@ -288,6 +287,67 @@ class RcoEtlSpec extends GraftSuite {
     } finally release()
   }
 
+  test("the rco_* entries read spine frames: plans scan no cached " +
+      "relation but the canonical log, rco_sessionize alone cuts once, " +
+      "and RcoPipeline.clear frees every frame the entries made") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.operators.{RcoPipeline, RcoQueries}
+    object Plans extends AdaptiveSparkPlanHelper
+    RcoPipeline.clear(spark)
+    spark.catalog.clearCache()
+    // compared by id: an earlier test's unreferenced checkpoint may be
+    // garbage-collected (and so leave the map) while this one runs
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    def write(name: String) = {
+      val df = RcoQueries.queries(name)(spark, dir)
+      df.write.format("noop").mode("overwrite").save()
+      df
+    }
+    val plans = RcoQueries.queries.keys.toSeq.sorted
+      .map(n => n -> write(n).queryExecution.executedPlan)
+    val log = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(Rco.downtimeLogDeduped(Tables.events(spark, dir))
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .get.cachedRepresentation.cacheBuilder
+    plans.foreach { case (name, plan) =>
+      val scans = Plans.collect(plan) {
+        case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+      assert(scans.forall(_ eq log),
+        s"$name reads a cached relation other than the canonical log:\n$plan")
+    }
+    RcoPipeline.clear(spark)
+    assert((persisted -- before).isEmpty,
+      s"RcoPipeline.clear left ${persisted -- before}")
+
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        actions.add(f); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      write("rco_sessionize")
+      // listener events arrive asynchronously but in order: once this
+      // marker's arrives, every earlier action's has
+      spark.range(1).collect()
+      eventually(timeout(60.seconds)) { assert(actions.contains("collect")) }
+      assert(actions.asScala.count(_ == "localCheckpoint") == 1,
+        s"rco_sessionize should cut only the sessionized frame: $actions")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      RcoPipeline.clear(spark)
+    }
+  }
+
   test("a caller-persisted canonical log survives a site's release") {
     import org.apache.spark.storage.StorageLevel
     spark.catalog.clearCache()
@@ -315,7 +375,7 @@ class RcoEtlSpec extends GraftSuite {
     // garbage-collected (and so leave the map) while the fleet runs
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
-    val base = Files.createTempDirectory("graft-fleet-share").toString
+    val base = tempDir("graft-fleet-share").toString
     val log = RcoEtl.runSites(spark, Seq(
       RcoEtl.SiteParams("A", Rco.testCoPredicate,
         machineLevel = false, firstStop = false),
@@ -373,7 +433,7 @@ class RcoEtlSpec extends GraftSuite {
     val out = RcoEtl.run(full, prod,
       RcoEtl.SiteParams("TestSite", Rco.testCoPredicate,
         machineLevel = false, firstStop = false))
-    val base = Files.createTempDirectory("graft-round").toString
+    val base = tempDir("graft-round").toString
     RcoEtl.load(spark, out, base, "TestSite")
     // Runtime minutes average in the hundreds → reference reducer says
     // 1 decimal place; the in-memory frame carries 4 (ProdOps rounds to

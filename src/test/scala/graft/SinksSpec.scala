@@ -12,7 +12,7 @@ class SinksSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sink").resolve("t").toString
+    tempDir("graft-sink").resolve("t").toString
 
   private def rows(path: String): Set[String] = {
     // the atomic-swap staging dirs must never survive a completed load

@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (matches Verify's config). */
@@ -36,8 +40,24 @@ case class Ev(
     idle: Int = 0,
     excluded: Boolean = false)
 
+/** Temp dirs for a suite's tables, deleted with their contents after
+  * the suite. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile))
+}
+
 /** Base suite: session + canonical downtime-log row builder. */
-abstract class GraftSuite extends AnyFunSuite {
+abstract class GraftSuite extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.spark
   import spark.implicits._
 

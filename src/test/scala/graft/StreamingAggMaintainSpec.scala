@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -18,7 +17,7 @@ class StreamingAggMaintainSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_aggm").resolve(name).toString
+    tempDir("stream_aggm").resolve(name).toString
 
   private def view(path: String): Map[String, (Long, Double, Double,
       Double)] =

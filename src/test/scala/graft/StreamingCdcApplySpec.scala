@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,7 +20,7 @@ class StreamingCdcApplySpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_cdc").resolve(name).toString
+    tempDir("stream_cdc").resolve(name).toString
 
   private type Snap = Map[Long, (String, Long)]
 

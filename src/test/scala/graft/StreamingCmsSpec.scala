@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -18,7 +17,7 @@ class StreamingCmsSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_cms").resolve(name).toString
+    tempDir("stream_cms").resolve(name).toString
 
   private val Depth = 3
   private val Width = 16

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,7 +21,7 @@ class StreamingCooccurSpec extends GraftSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_cooc").resolve(name).toString
+    tempDir("stream_cooc").resolve(name).toString
 
   /** The fixture's (user, item) rows — the same extraction the batch
     * operator runs. */

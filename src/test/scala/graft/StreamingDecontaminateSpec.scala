@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +18,7 @@ class StreamingDecontaminateSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_decon").resolve(name).toString
+    tempDir("stream_decon").resolve(name).toString
 
   private def corpus: DataFrame = (1L to 120L)
     .map(i => (i, s"text of doc $i", i % 7))

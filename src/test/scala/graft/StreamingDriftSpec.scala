@@ -23,8 +23,7 @@ class StreamingDriftSpec extends GraftSuite {
 
   test("streamed counts ≡ batch drift, incl. a value baseline lacks") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_drift").toString + "/state"
+    val path = tempDir("graft_stream_drift").toString + "/state"
     val chops = Seq(Seq("a", "b", null), Seq("b", "b", "d"), Seq("d"))
     val input = MemoryStream[DriftRow]
     val q = StreamingDrift.start(input.toDF(), path, "c")
@@ -43,8 +42,7 @@ class StreamingDriftSpec extends GraftSuite {
   }
 
   test("ledger replay is a no-op") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_drift_replay").toString +
+    val path = tempDir("graft_stream_drift_replay").toString +
       "/state"
     StreamingDrift.fold(Seq("a", "b").toDF("c"), path, "c", "e0")
     val before = report(

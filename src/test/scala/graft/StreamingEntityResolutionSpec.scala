@@ -16,8 +16,7 @@ class StreamingEntityResolutionSpec extends GraftSuite {
 
   test("streamed registry ≡ batch resolve, bridge across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_er").toString
+    val path = tempDir("graft_stream_er").toString
     val chops = Seq(
       Seq(ErRec(10L, "martin"), ErRec(11L, "queen")),
       Seq(ErRec(20L, "martins"), ErRec(21L, "martyx")),

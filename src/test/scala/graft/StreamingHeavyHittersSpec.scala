@@ -43,8 +43,7 @@ class StreamingHeavyHittersSpec extends GraftSuite {
   test("streamed candidates ⊇ true heavy keys across random chops, " +
       "with est bounds intact") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_hh").toString
+    val dir = tempDir("graft_stream_hh").toString
     val data = stream(6000, 400, seed = 11)
     val exact = data.groupBy(identity).map { case (k, v) =>
       k -> v.size.toLong }
@@ -83,8 +82,7 @@ class StreamingHeavyHittersSpec extends GraftSuite {
   }
 
   test("redelivering a batch replaces its shard, never double-counts") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_hh_redeliver").toString
+    val dir = tempDir("graft_stream_hh_redeliver").toString
     val data = stream(3000, 200, seed = 23)
     val (a, b) = data.splitAt(data.size / 2)
     StreamingHeavyHitters.writeShard(a.toDF("k"), col("k"), dir, 0L, Cap)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -38,7 +37,7 @@ class StreamingIngestSpec extends GraftSuite {
     IngestDoc(13L, spamText))
 
   private def freshIndex(): String =
-    Files.createTempDirectory("stream_idx").resolve("index").toString
+    tempDir("stream_idx").resolve("index").toString
 
   test("streamed ingest equals per-split batch ingest (accepted + index)") {
     implicit val sqlCtx = spark.sqlContext

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,7 +21,7 @@ class StreamingLoadSpec extends GraftSuite {
 
   test("micro-batches upsert windows; reopened windows don't duplicate") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sload")
+    val dir = tempDir("graft-sload")
     val path = dir.resolve("rt").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[E]
@@ -53,7 +52,7 @@ class StreamingLoadSpec extends GraftSuite {
 
   test("late data reopening an OLD window must not wipe later windows") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-sload2")
+    val dir = tempDir("graft-sload2")
     val path = dir.resolve("rt").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[E]

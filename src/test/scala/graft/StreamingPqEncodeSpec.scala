@@ -26,7 +26,7 @@ class StreamingPqEncodeSpec extends GraftSuite {
     df.as[PqVec].collect().toSeq
 
   private def freshPath(): String =
-    Files.createTempDirectory("stream_pq").resolve("pq").toString
+    tempDir("stream_pq").resolve("pq").toString
 
   /** The batch REFERENCE of a streamed encode: the same packed+celled
     * rows [[Pq.encodeIndexed]] emits against the frozen books. */

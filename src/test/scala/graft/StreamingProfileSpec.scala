@@ -28,8 +28,7 @@ class StreamingProfileSpec extends GraftSuite {
 
   test("streamed shards merge to the whole-corpus profile") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_profile").toString
+    val dir = tempDir("graft_stream_profile").toString
     val expected = estimates(LlmCorpus.profileSketch(corpus.toDF()))
     val rnd = new scala.util.Random(3)
     var rest = corpus
@@ -47,8 +46,7 @@ class StreamingProfileSpec extends GraftSuite {
   }
 
   test("redelivering a batch replaces its shard, never double-counts") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_profile_redeliver").toString
+    val dir = tempDir("graft_stream_profile_redeliver").toString
     val (a, b) = corpus.splitAt(corpus.size / 2)
     StreamingProfile.writeShard(a.toDF(), dir, 0L)
     StreamingProfile.writeShard(b.toDF(), dir, 1L)
@@ -65,8 +63,7 @@ class StreamingProfileSpec extends GraftSuite {
     // merged profile must keep the old shard's counts/sketches and
     // compute quantiles over the post-upgrade rows, not fail or
     // silently drop the source
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_profile_upgrade").toString
+    val dir = tempDir("graft_stream_profile_upgrade").toString
     val (a, b) = corpus.splitAt(corpus.size / 2)
     LlmCorpus.profileSketch(a.toDF()).drop("len_hist") // pre-upgrade
       .withColumn("batch_id", lit(0L))
@@ -88,8 +85,7 @@ class StreamingProfileSpec extends GraftSuite {
     // profileSketch pins the tokenized batch; a long-running stream
     // calls writeShard once per micro-batch — without the CacheScope
     // release each call would leave one more dead cached frame behind
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_profile_leak").toString
+    val dir = tempDir("graft_stream_profile_leak").toString
     val cached0 = spark.sparkContext.getPersistentRDDs.size
     (0 until 3).foreach(i =>
       StreamingProfile.writeShard(corpus.take(20).toDF(), dir, i.toLong))

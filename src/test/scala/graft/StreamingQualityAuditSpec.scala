@@ -57,8 +57,7 @@ class StreamingQualityAuditSpec extends GraftSuite {
   }
 
   test("streamed ≡ batch across chops, duplicates split across batches") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sqa").toString
+    val dir = tempDir("graft_sqa").toString
     val expected = batchReport(rows.toDF())
     // k1's three occurrences land in three different batches: only the
     // maintained state can see them as duplicates
@@ -70,14 +69,12 @@ class StreamingQualityAuditSpec extends GraftSuite {
   }
 
   test("single-batch stream ≡ batch") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sqa1").toString
+    val dir = tempDir("graft_sqa1").toString
     assert(streamedReport(Seq(rows), dir) == batchReport(rows.toDF()))
   }
 
   test("shard redelivery replaces; unique ledger replay is a no-op") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sqa_replay").toString
+    val dir = tempDir("graft_sqa_replay").toString
     val (a, b) = rows.splitAt(4)
     StreamingQualityAudit.writeShard(a.toDF(), dir, "t", checks, Nil, 0L)
     StreamingQualityAudit.writeShard(b.toDF(), dir, "t", checks, Nil, 1L)

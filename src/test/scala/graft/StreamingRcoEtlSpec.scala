@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
 import scala.util.Random
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -41,8 +39,6 @@ class StreamingRcoEtlSpec extends GraftSuite {
     Tables.events(spark, "/root/testdata/sf0.001").as[RawEvent].collect()
       .sortBy(e => (e.ts.getTime, e.event_id)).toSeq
 
-  private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
-
   /** Every compared table as a sorted multiset of rows: all columns but
     * the bucket column and Script_Data's run timestamp, doubles rounded
     * as [[IncrementalEtlSpec]] rounds them. */
@@ -60,7 +56,7 @@ class StreamingRcoEtlSpec extends GraftSuite {
 
   /** One batch run + load of `evs`; returns the output dir. */
   private def batchRun(evs: Seq[RawEvent]): String = {
-    val dir = tmp("graft-rco-batch").toString
+    val dir = tempDir("graft-rco-batch").toString
     val all = evs.toDF()
     RcoEtl.load(spark, RcoEtl.run(Rco.downtimeLogDeduped(all),
       Rco.productionLog(all), params), dir, params.server)
@@ -87,7 +83,7 @@ class StreamingRcoEtlSpec extends GraftSuite {
   private def streamed(batches: Seq[Seq[RawEvent]])
       : (String, String, MemoryStream[RawEvent]) = {
     implicit val sqlCtx = spark.sqlContext
-    val root = tmp("graft-rco-stream")
+    val root = tempDir("graft-rco-stream")
     val (dir, ckpt) = (root.resolve("out").toString,
       root.resolve("ckpt").toString)
     val input = MemoryStream[RawEvent]

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -16,7 +15,7 @@ class StreamingScd2Spec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("stream_scd2").resolve(name).toString
+    tempDir("stream_scd2").resolve(name).toString
 
   /** Random changelog as (k, t)-instant units: heartbeats (3 attr
     * values over many instants), same-instant seq races, None attrs. */

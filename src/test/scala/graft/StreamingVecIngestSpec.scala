@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -30,7 +29,7 @@ class StreamingVecIngestSpec extends GraftSuite {
     IngestVec(13L, zero))
 
   private def freshIndex(): String =
-    Files.createTempDirectory("stream_vecidx").resolve("index").toString
+    tempDir("stream_vecidx").resolve("index").toString
 
   test("streamed vector ingest equals per-split batch ingest") {
     implicit val sqlCtx = spark.sqlContext
